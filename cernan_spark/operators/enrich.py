@@ -1,18 +1,20 @@
-"""Broadcast lookup-join enrichment: default-tag overlay.
+"""Default-tag overlay enrichment.
 
 Cernan overlays per-sink/per-filter default tags at the edge without
 mutating pipeline events (TagIter::Double, reference
 src/metric/mod.rs:43-85; event tags win over defaults,
 src/metric/telemetry.rs:583-601,956-984).
 
-Spark-first: the tag dictionaries are tiny dimension tables → one
-`F.broadcast` join per scope, then a first-wins map merge (event ⊳ scoped
-defaults ⊳ global defaults). No shuffle of the fact table.
+Spark-first: the tag dictionaries are tiny config. :func:`enrich_tags`
+joins one broadcast scope map per scope, then does a first-wins map merge
+(event ⊳ scoped defaults ⊳ global defaults); :func:`enrich_tags_fast`, for
+rows without event tags, collects the dictionaries and attaches the merged
+maps as literals in one projection. No shuffle of the fact table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cernan_spark.functions.jsonlog import merge_maps_first_wins
@@ -38,7 +40,10 @@ def enrich_tags_fast(
     """Fast path for rows WITHOUT event tags (the transcripts case): the
     merged default-tag map and its canonical 'k=v,…' key are precomputed
     driver-side per (role, tool) combo — the dictionaries are tiny config —
-    and attached with ONE broadcast hash join. No per-row map allocation.
+    and attached by ``element_at`` on two literal maps keyed by the
+    (role, tool) pair: one projection, no join and no per-row map merging.
+    A ``tags`` map lists its entries in precedence order: role, tool, then
+    global defaults, each in dictionary order.
 
     Rows whose role/tool values are outside the dictionaries map to a
     sentinel 'other' key per axis, so partial matches (known role,
@@ -71,37 +76,40 @@ def enrich_tags_fast(
         return ",".join(f"{k}={m[k]}" for k in sorted(m))
 
     OTHER = "\x00other\x00"  # sentinel for values outside a dictionary
-    combos = [
-        (ro, to, merged(ro, to), key_of(merged(ro, to)))
-        for ro in [*role_d, OTHER]
-        for to in [*tool_d, OTHER]
-    ]
-    spark = df.sparkSession
-    dim = spark.createDataFrame(
-        combos,
-        "_role_j string, _tool_j string, tags map<string,string>, tags_key string",
-    )
+    pairs = [(ro, to) for ro in [*role_d, OTHER] for to in [*tool_d, OTHER]]
+
+    def pair(role: Column, tool: Column) -> Column:
+        return F.struct(role.alias("role"), tool.alias("tool"))
+
+    def by_pair(value) -> Column:
+        """Literal map (role, tool) → ``value(merged tags)``."""
+        return F.create_map(*[
+            x for ro, to in pairs
+            for x in (pair(F.lit(ro), F.lit(to)), value(merged(ro, to)))
+        ])
+
+    def tags_lit(m: dict[str, str]) -> Column:
+        return F.create_map(
+            *[F.lit(x) for kv in m.items() for x in kv]
+        ).cast("map<string,string>")
+
+    def key_lit(m: dict[str, str]) -> Column:
+        return F.lit(key_of(m))
+
     role_j = F.when(
         F.col(role_col).isin(list(role_d)), F.col(role_col)
     ).otherwise(F.lit(OTHER))
     tool_j = F.when(
         F.col(tool_col).isin(list(tool_d)), F.col(tool_col)
     ).otherwise(F.lit(OTHER))
-    out = (
-        df.withColumn("_role_j", role_j)
-        .withColumn("_tool_j", tool_j)
-        .join(F.broadcast(dim), ["_role_j", "_tool_j"], "left")
-        .drop("_role_j", "_tool_j")
-    )
-    # every combo exists in dim (sentinels included) — coalesce only guards
-    # the degenerate all-empty-dictionary case
+    lookup = pair(role_j, tool_j)
+    # every normalised pair is a key (sentinels included), so a lookup never
+    # misses; the coalesce only keeps both columns non-null in the schema
     fallback = merged(OTHER, OTHER)
-    fb_map = F.create_map(
-        *[x for kv in fallback.items() for x in (F.lit(kv[0]), F.lit(kv[1]))]
-    ) if fallback else F.expr("map()")
-    return out.withColumn("tags", F.coalesce(F.col("tags"), fb_map)).withColumn(
-        "tags_key", F.coalesce(F.col("tags_key"), F.lit(key_of(fallback)))
-    )
+    return df.withColumns({
+        "tags": F.coalesce(F.element_at(by_pair(tags_lit), lookup), tags_lit(fallback)),
+        "tags_key": F.coalesce(F.element_at(by_pair(key_lit), lookup), key_lit(fallback)),
+    })
 
 
 def enrich_tags(

@@ -7,6 +7,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cernan_spark.sources.dimensions import local_table
+
 
 def delay_filter(
     df: DataFrame,
@@ -221,7 +223,7 @@ def apply_programmable_safe(
     failures is an empty frame on success."""
     spark = df.sparkSession
     fail_schema = "name string, value double, kind string"
-    ok = spark.createDataFrame([], fail_schema)
+    ok = local_table(spark, [], fail_schema)
     try:
         out = PROGRAMMABLE_REGISTRY[func](df, **kwargs)
         # force plan resolution now: a bad transform must fail HERE, not at
@@ -229,7 +231,8 @@ def apply_programmable_safe(
         out.schema  # noqa: B018
         return out, ok
     except Exception:  # noqa: BLE001 — NoSuchFunction / analysis error
-        fail = spark.createDataFrame(
+        fail = local_table(
+            spark,
             [(f"cernan.filter.{filter_path}.{func}.failure", 1.0, "SUM")],
             fail_schema,
         )

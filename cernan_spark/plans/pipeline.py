@@ -7,8 +7,13 @@ flush formatting (src/sink/*.rs) — re-expressed as one declarative Spark
 plan per stage. Stage boundaries:
 
   scan (column-pruned parquet) ─ narrow → explode/classify/parse/enrich
-  (single codegen stage) → broadcast route (no shuffle) → per-kind hash
-  aggregate (THE shuffle, map-side combined) → sink formatting (narrow).
+  (single codegen stage; enrich is a projection over literal tag maps)
+  → one-pass hash aggregate (THE shuffle, map-side combined) → broadcast
+  route fan-out of the aggregates (no shuffle) → sink formatting (narrow).
+
+The config tables (routes, tag dictionaries, histogram masks) are literal
+relations held in the JVM, or are collected into literals at build time,
+so no stage runs a Python worker.
 """
 
 from __future__ import annotations
@@ -22,13 +27,14 @@ from cernan_spark.functions.classify import explode_lines
 from cernan_spark.functions.graphite import parse_graphite_lines
 from cernan_spark.functions.jsonlog import parse_json_logs
 from cernan_spark.functions.statsd import parse_statsd_lines
-from cernan_spark.operators.aggregate import bucket_aggregate, prometheus_accumulate
-from cernan_spark.operators.enrich import enrich_tags, enrich_tags_fast
+from cernan_spark.operators.aggregate import prometheus_accumulate
+from cernan_spark.operators.enrich import enrich_tags_fast
 from cernan_spark.operators.route import route, routed_counts, unrouted
 from cernan_spark.sources.dimensions import (
     default_histogram_masks,
     default_routes,
     default_tag_dicts,
+    local_table,
 )
 
 
@@ -134,7 +140,13 @@ def run_pipeline(
     """Full parse → enrich → route → aggregate. Returns every materializable
     stage so callers (tests, bench, sinks) pick what they need lazily."""
     cfg = cfg or PipelineConfig()
-    routes = routes if routes is not None else default_routes(spark)
+    # routes are the only config table the plan reads; a caller's frame is
+    # re-held as a JVM literal relation (see local_table) so that no action
+    # on the outputs rescans a Python RDD to rebuild the route broadcast
+    routes = (
+        default_routes(spark) if routes is None
+        else local_table(spark, routes.collect(), routes.schema)
+    )
     tag_dicts = tag_dicts if tag_dicts is not None else default_tag_dicts(spark)
     masks = masks if masks is not None else default_histogram_masks(spark)
 
@@ -166,7 +178,7 @@ def run_pipeline(
 
     if cfg.with_tags:
         # transcripts carry no event tags → the precomputed-combo fast path
-        # (one broadcast join, no per-row map merging)
+        # (one projection over literal maps, no join, no per-row map merging)
         telemetry = enrich_tags_fast(telemetry, tag_dicts)
         logs = enrich_tags_fast(logs, tag_dicts)
 
@@ -182,8 +194,8 @@ def run_pipeline(
     # Aggregate ONCE on the un-fanned telemetry (one scan, one shuffle via
     # bucket_aggregate_onepass), then fan the per-series aggregates out to
     # sinks with a broadcast route join — the fan-out multiplies tiny
-    # aggregate rows, not raw events. Valid because sinks share bin_width
-    # here; per-sink widths would use _agg_per_sink instead.
+    # aggregate rows, not raw events. Valid because sinks share bin_width;
+    # per-sink widths would fold `sink` into the aggregate's group key.
     from cernan_spark.functions.statsd import mask_bounds_expr
     from cernan_spark.operators.aggregate import bucket_aggregate_onepass
 
@@ -217,15 +229,3 @@ def run_pipeline(
         result["telemetry_unfiltered"] = telemetry_unfiltered
     return result
 
-
-def _agg_per_sink(routed_tel: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Bucket-aggregate with `sink` folded into the group key (one shuffle
-    covers all sinks instead of one scan per sink)."""
-    keyed = routed_tel.withColumn("name", F.concat_ws("\x1f", "sink", "name"))
-    agg = bucket_aggregate(
-        keyed, bin_width=cfg.bin_width, quantiles=cfg.quantiles, accuracy=cfg.accuracy
-    )
-    split = F.split(F.col("name"), "\x1f", 2)
-    return agg.withColumn("sink", split.getItem(0)).withColumn(
-        "name", split.getItem(1)
-    )

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cernan_spark.sources.dimensions import local_table
+
 _SCHEMA = "name string, value double, kind string"
 
 
@@ -107,14 +109,12 @@ def internal_telemetry(
         )
     else:
         parts.append(
-            spark.createDataFrame(
-                [("cernan.filters.delay.telemetry.reject", 0.0, "SUM")], _SCHEMA
+            local_table(
+                spark, [("cernan.filters.delay.telemetry.reject", 0.0, "SUM")], _SCHEMA
             )
         )
     parts.append(
-        spark.createDataFrame(
-            [("cernan.filters.delay.log.reject", 0.0, "SUM")], _SCHEMA
-        )
+        local_table(spark, [("cernan.filters.delay.log.reject", 0.0, "SUM")], _SCHEMA)
     )
 
     # --- logs: accept + json-encode counters in one aggregate ---

@@ -1,4 +1,4 @@
-"""Broadcast dimension tables: routes, tag dictionaries, histogram masks.
+"""Config dimension tables: routes, tag dictionaries, histogram masks.
 
 These stand in for cernan's TOML-configured topology:
 
@@ -9,13 +9,25 @@ These stand in for cernan's TOML-configured topology:
 * histogram_masks — statsd timer/histogram regex→bounds rules
               (reference src/config.rs:908-941, src/source/statsd.rs:36-47).
 
-All three are tiny and always broadcast; at 100 TB they stay driver-side
-dimension tables joined with `F.broadcast`.
+All three are tiny config, so each is a literal relation held in the JVM
+(:func:`local_table`): a ``createDataFrame`` frame would plan as a scan of a
+pickled Python RDD, and every action that re-broadcasts it would start
+Python workers to read a few constant rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import Any, Iterable
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructType,
+    _parse_datatype_string,
+)
 
 ROUTE_SCHEMA = "rule_id string, match_kind string, name_mask string, sink string, priority int"
 
@@ -62,13 +74,48 @@ DEFAULT_HISTOGRAM_MASKS = [
 ]
 
 
+def _literal(value: Any, dtype: DataType) -> Column:
+    """``value`` as a literal column; the caller's cast fixes its type."""
+    if value is None:
+        return F.lit(None).cast(dtype)
+    if isinstance(dtype, ArrayType):
+        return F.array(*[_literal(v, dtype.elementType) for v in value])
+    if isinstance(dtype, MapType):
+        return F.map_from_arrays(
+            F.array(*[_literal(k, dtype.keyType) for k in value]),
+            F.array(*[_literal(v, dtype.valueType) for v in value.values()]),
+        )
+    if isinstance(dtype, StructType):
+        by_name = isinstance(value, dict) or hasattr(value, "__fields__")
+        values = [value[f.name] for f in dtype.fields] if by_name else value
+        return F.struct(
+            *[_literal(v, f.dataType).alias(f.name) for v, f in zip(values, dtype.fields)]
+        )
+    return F.lit(value)
+
+
+def local_table(
+    spark: SparkSession, rows: Iterable, schema: StructType | str
+) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` as a relation held in the JVM:
+    the same schema (nullability included) and rows, built by inlining one
+    literal array of structs over a one-row range — no Python RDD under it,
+    so no Python worker runs when an action reads or broadcasts it."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    rows = F.array(*[_literal(r, schema) for r in rows])
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(rows.cast(ArrayType(schema, containsNull=False)))
+    )
+
+
 def default_routes(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DEFAULT_ROUTES, ROUTE_SCHEMA)
+    return local_table(spark, DEFAULT_ROUTES, ROUTE_SCHEMA)
 
 
 def default_tag_dicts(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DEFAULT_TAG_DICTS, TAG_DICT_SCHEMA)
+    return local_table(spark, DEFAULT_TAG_DICTS, TAG_DICT_SCHEMA)
 
 
 def default_histogram_masks(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DEFAULT_HISTOGRAM_MASKS, MASK_SCHEMA)
+    return local_table(spark, DEFAULT_HISTOGRAM_MASKS, MASK_SCHEMA)

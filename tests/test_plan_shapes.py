@@ -415,3 +415,34 @@ def test_event_pattern_single_exchange(spark):
     plan = _final_plan(out)
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan[:1200]
     assert "Window" not in plan
+
+
+def test_flagship_runs_no_python_and_no_config_join(spark):
+    """The flagship's outputs plan with no Python crossing: no scan of a
+    Python RDD (a ``createDataFrame`` config table re-runs Python workers
+    on every action that rebuilds its broadcast) and no Python UDF node.
+    Enrichment is a projection: no join at all under the aggregates, and
+    ``enrich_tags_fast`` adds none to its input."""
+    from cernan_spark.operators.enrich import enrich_tags_fast
+    from cernan_spark.plans.pipeline import parse_stage, run_pipeline
+    from cernan_spark.sources.dimensions import (
+        DEFAULT_ROUTES, ROUTE_SCHEMA, default_tag_dicts,
+    )
+    from cernan_spark.sources.transcripts import synthetic_transcripts
+
+    t = synthetic_transcripts(spark, n_convs=20, turns_per_conv=10, seed=3)
+    # a caller's createDataFrame routes leave the plan too
+    routes = spark.createDataFrame(DEFAULT_ROUTES, ROUTE_SCHEMA)
+    out = run_pipeline(spark, t, routes=routes)
+    for name in ("aggregates", "routed_telemetry", "routed_logs"):
+        plan = _final_plan(out[name])
+        assert _count(plan, r"ExistingRDD") == 0, (name, plan)
+        assert _count(plan, r"BatchEvalPython|ArrowEvalPython") == 0, (name, plan)
+    agg_plan = _final_plan(out["aggregates"])
+    assert _count(agg_plan, r"BroadcastHashJoin") == 0, agg_plan
+
+    tel = parse_stage(t)["telemetry"]
+    joins = r"\w+Join\b"
+    assert _count(_plan(enrich_tags_fast(tel, default_tag_dicts(spark))), joins) == _count(
+        _plan(tel), joins
+    )
