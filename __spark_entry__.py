@@ -2999,7 +2999,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # 2 family-representative stable keepers. Everything at position 51+
     # holds a prior driver-green row with unchanged code, so a fully
     # green r5 gives every entry a row in the r3∪r4∪r5 union. All
-    # entries remain covered by scripts/check_oracle.py regardless.
+    # entries remain covered by scripts/check_oracle_arrow.py regardless.
     return {
         # -- 26 never-driver-graded queries (11 carried from the r4 ask +
         # 15 r5-new ops) --------------------------------------------------
@@ -3123,7 +3123,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "parse_statsd": q_parse_statsd,
         # -- fourth-session adds (position 104+: outside the graded
         # window by design — the window's union-coverage plan stays
-        # intact; these are verified by scripts/check_oracle.py) ----------
+        # intact; these are verified by scripts/check_oracle_arrow.py) ----
         "exact_substr_dedup": q_exact_substr_dedup,
         "chat_render": q_chat_render,
         "bigram_logprob": q_bigram_logprob,

@@ -14,9 +14,9 @@ Spark-first:
 - plans/     end-to-end pipeline assembly, checkpoint/lineage/metrics
 - streaming/ Structured Streaming variants of the stateful pieces
 
-Everything is DataFrame/SQL-first: parses are `regexp_extract` column
-expressions (with an Arrow pandas_udf variant for the combined grok),
-enrichment is broadcast map_concat overlay, routing is a broadcast-joined
+Everything is DataFrame/SQL-first: parses are string-position and
+`regexp_extract` column expressions (grok templates included), enrichment
+is a projection over literal tag maps, routing is a broadcast-joined
 rules table fanned out to per-sink tables, and the aggregation engine is a
 single hash-aggregate `groupBy(key, kind, bin)` implementing cernan's
 Value::add merge laws (reference: src/metric/telemetry.rs:94-137).

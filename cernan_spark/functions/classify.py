@@ -38,7 +38,7 @@ def explode_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out
 
 
-def line_class(line: Column) -> Column:
+def line_class(line: Column, statsd_valid: Column) -> Column:
     """Classify one line: statsd | graphite | json | log | bad.
 
     Order matters: statsd, then graphite, then JSON-object candidate, then
@@ -46,14 +46,12 @@ def line_class(line: Column) -> Column:
     ``|`` or ``:`` / empty / single bare token) are ``bad`` — counted,
     never shipped (mirrors parse_statsd's false return, statsd.rs:553-573).
 
-    The statsd check reuses the string-op validity predicate (cheap);
+    ``statsd_valid`` is the statsd parse's ``is_valid`` column, so the line
+    is scanned once: parse first, then classify from its validity.
     JSON candidacy is a '{' prefix — actual parse validity is settled on
     the log path by from_json (invalid objects ship as-is, matching
     json_encode_filter.rs:85-120).
     """
-    from cernan_spark.functions.statsd import statsd_parse_columns
-
-    statsd_valid = statsd_parse_columns(line)[4]
     return (
         F.when(statsd_valid, F.lit(CLASS_STATSD))
         .when(line.rlike(GRAPHITE_LINE_RX), F.lit(CLASS_GRAPHITE))
@@ -67,10 +65,6 @@ def line_class(line: Column) -> Column:
         )
         .otherwise(F.lit(CLASS_LOG))
     )
-
-
-def classify_lines(df: DataFrame, line_col: str = "line") -> DataFrame:
-    return df.withColumn("line_class", line_class(F.col(line_col)))
 
 
 #: statsd kinds the DLQ validator accepts (statsd.rs:22-163 grammar)

@@ -24,10 +24,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_NUM = r"[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?"
-#: One regex for the whole line. Groups: 1=name 2=value 3=type 4=rate.
-STATSD_LINE_RX = rf"^([^:]+):({_NUM})\|(g|c|ms|h)(?:\|?@({_NUM}))?$"
-
 KIND_SUM = "SUM"
 KIND_SET = "SET"
 KIND_SUMMARIZE = "SUMMARIZE"
@@ -111,22 +107,6 @@ def _outputs_from_slices(
         F.when(valid, persist).otherwise(F.lit(None).cast("boolean")).alias("persist"),
         valid.alias("is_valid"),
     ]
-
-
-def statsd_parse_columns(line: Column) -> list[Column]:
-    """Columns (name, value, kind, persist, is_valid) parsed from one line,
-    mirroring the reference's find(':')/find('|')/find('@') scan.
-
-    NOTE on expression blowup: every output column re-derives the slices
-    (conditional branches are skipped by codegen subexpression
-    elimination), so embedding ALL FIVE outputs in a wide fused stage can
-    exceed janino's 64 KB method limit and silently fall back to
-    interpreted execution. Single-column consumers (classify) are fine
-    with this form; multi-column consumers should go through
-    :func:`parse_statsd_lines`, which materializes the slices ONCE per
-    row behind a Generate barrier.
-    """
-    return _outputs_from_slices(*_slice_exprs(line))
 
 
 def mask_bounds_expr(masks: DataFrame, name_col: str = "name") -> Column:

@@ -8,8 +8,6 @@ Tests compare the Spark operators against this model on seeded corpora.
 
 from __future__ import annotations
 
-import json
-import math
 from dataclasses import dataclass
 
 
@@ -24,8 +22,7 @@ class ParsedMetric:
 
 def _to_float(s: str) -> float | None:
     try:
-        v = float(s)
-        return v if math.isfinite(v) or True else None
+        return float(s)
     except ValueError:
         return None
 
@@ -84,7 +81,8 @@ def parse_graphite_py(line: str) -> ParsedMetric | None:
 
 
 def classify_py(line: str) -> str:
-    """Twin of functions/classify.line_class."""
+    """Test model of ``classify.line_class`` applied to the statsd
+    parse's validity, as ``parse_stage`` classifies each line."""
     if parse_statsd_py(line) is not None:
         return "statsd"
     if parse_graphite_py(line) is not None:
@@ -122,16 +120,3 @@ def bucket_model(
             out[key] = cur
     return out
 
-
-def gauge_model(events: list[tuple[str, float]]) -> list[float]:
-    """The statsd gauge fold (src/buckets.rs:240-309 scenario): each event
-    is ('set'|'delta', v); returns the running value after each event."""
-    running = 0.0
-    trace = []
-    for op, v in events:
-        if op == "set":
-            running = v
-        else:
-            running += v
-        trace.append(running)
-    return trace

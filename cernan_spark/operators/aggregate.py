@@ -12,10 +12,11 @@ src/metric/telemetry.rs:94-137):
   and survives flushes (buckets.rs:100-116,163-175) — implemented as an
   ordered running fold, see :func:`gauge_carry_forward`.
 
-Scale notes: each per-kind aggregate is a single shuffle with map-side
-partial aggregation (Spark HashAggregate); the tag map is canonicalized to
-a sortable string key so grouping never touches MapType. Skewed series keys
-are handled upstream by salting (operators/skew.py) + AQE.
+Scale notes: all four merge laws run in one hash aggregate
+(:func:`bucket_aggregate_onepass`: one scan, one shuffle, map-side partial
+aggregation); the tag map is grouped by its sortable string ``tags_key``
+so grouping never touches MapType. Skewed series keys are handled upstream
+by salting (operators/skew.py) + AQE.
 """
 
 from __future__ import annotations
@@ -27,19 +28,6 @@ from pyspark.sql import functions as F
 DEFAULT_QUANTILES = [0.0, 0.25, 0.5, 0.75, 0.9, 0.95, 0.99, 0.999, 1.0]
 #: CKMS default error bound ε=0.001 → percentile_approx accuracy ≈ 1/ε
 DEFAULT_ACCURACY = 1000
-
-
-def canonical_tags(tags: Column) -> Column:
-    """Map → canonical 'k=v,k=v' string, sorted by key.
-
-    Grouping on MapType is not allowed in Spark; cernan hashes the sorted
-    tag iterator the same way (src/metric/telemetry.rs:844-873).
-    """
-    entries = F.array_sort(F.map_entries(tags))
-    return F.array_join(
-        F.transform(entries, lambda e: F.concat(e["key"], F.lit("="), e["value"])),
-        ",",
-    )
 
 
 def with_bin(df: DataFrame, bin_width: int, ts_col: str = "ts") -> DataFrame:
@@ -59,68 +47,6 @@ def _group_cols(df: DataFrame) -> list[str]:
     if "tags_key" in df.columns:
         cols.insert(1, "tags_key")
     return cols
-
-
-def agg_sums(df: DataFrame) -> DataFrame:
-    """kind=SUM merge law: addition (telemetry.rs:96-107)."""
-    return (
-        df.filter(F.col("kind") == "SUM")
-        .groupBy(*_group_cols(df))
-        .agg(
-            F.sum("value").alias("agg_value"),
-            F.count("*").alias("n_points"),
-            F.max("persist").alias("persist"),
-        )
-        .withColumn("kind", F.lit("SUM"))
-    )
-
-
-def agg_sets(df: DataFrame, order_col: str = "order_key") -> DataFrame:
-    """kind=SET merge law: last write wins under the stable total order
-    (telemetry.rs:108-118; determinism via (conv_id, turn_idx) order key)."""
-    return (
-        df.filter(F.col("kind") == "SET")
-        .groupBy(*_group_cols(df))
-        .agg(
-            F.max_by("value", F.col(order_col)).alias("agg_value"),
-            F.count("*").alias("n_points"),
-            F.max("persist").alias("persist"),
-        )
-        .withColumn("kind", F.lit("SET"))
-    )
-
-
-def agg_summarize(
-    df: DataFrame,
-    quantiles: list[float] | None = None,
-    accuracy: int = DEFAULT_ACCURACY,
-    exact: bool = False,
-) -> DataFrame:
-    """kind=SUMMARIZE: quantile sketch union + exact sum/count/mean.
-
-    ``exact=True`` computes exact percentiles (for oracle comparison);
-    the scale path uses percentile_approx, whose per-partition sketches
-    merge map-side exactly like cernan's CKMS union (telemetry.rs:119-126).
-    """
-    qs = quantiles or DEFAULT_QUANTILES
-    q_arr = F.array(*[F.lit(q) for q in qs])
-    pct = (
-        F.percentile("value", q_arr)
-        if exact
-        else F.percentile_approx("value", q_arr, F.lit(accuracy))
-    )
-    return (
-        df.filter(F.col("kind") == "SUMMARIZE")
-        .groupBy(*_group_cols(df))
-        .agg(
-            pct.alias("quantile_values"),
-            F.sum("value").alias("samples_sum"),
-            F.count("*").alias("n_points"),
-            F.avg("value").alias("mean_value"),
-        )
-        .withColumn("quantile_probs", F.array(*[F.lit(q) for q in qs]))
-        .withColumn("kind", F.lit("SUMMARIZE"))
-    )
 
 
 def agg_histograms(
@@ -198,8 +124,10 @@ def bucket_aggregate_onepass(
       HISTOGRAM → per-bucket conditional counts (bucket index precomputed
       per row), re-zipped with the group's bounds post-agg
 
-    This replaces the 4-branch union (which re-scanned the upstream once
-    per kind). Output schema matches :func:`bucket_aggregate`.
+    Input needs (name, value, kind, persist[, bounds], ts|event_epoch,
+    order_key[, tags_key]). ``bounds_expr`` is the name→bounds CASE chain
+    (``statsd.mask_bounds_expr``) that labels the histogram buckets;
+    without it they carry the default bounds.
     """
     qs = quantiles or DEFAULT_QUANTILES
     df = with_bin(parsed, bin_width)
@@ -287,62 +215,6 @@ def bucket_aggregate_onepass(
         F.when(is_summ, F.col("_smean")).alias("mean_value"),
         hist.alias("hist"),
     )
-
-
-def bucket_aggregate(
-    parsed: DataFrame,
-    bin_width: int = 60,
-    quantiles: list[float] | None = None,
-    accuracy: int = DEFAULT_ACCURACY,
-    order_col: str = "order_key",
-) -> DataFrame:
-    """Full Buckets::add equivalent: union of the four per-kind aggregates
-    on one wide schema. Input needs (name, value, kind, persist[, bounds],
-    ts|event_epoch, order_key[, tags_key]).
-
-    NOTE: prefer :func:`bucket_aggregate_onepass` in pipelines — it does
-    the same work in one scan+shuffle; this 4-branch form re-scans the
-    upstream per kind and exists for per-kind composability/testing."""
-    df = with_bin(parsed, bin_width)
-    sums = agg_sums(df).select(
-        *_group_cols(df), "kind", "agg_value", "n_points", "persist"
-    )
-    sets = agg_sets(df, order_col).select(
-        *_group_cols(df), "kind", "agg_value", "n_points", "persist"
-    )
-    scalar = sums.unionByName(sets).select(
-        "*",
-        F.lit(None).cast("array<double>").alias("quantile_values"),
-        F.lit(None).cast("array<double>").alias("quantile_probs"),
-        F.lit(None).cast("double").alias("samples_sum"),
-        F.lit(None).cast("double").alias("mean_value"),
-        F.lit(None).cast("array<struct<bound:double,cnt:bigint>>").alias("hist"),
-    )
-    summ = agg_summarize(df, quantiles, accuracy).select(
-        *_group_cols(df),
-        "kind",
-        F.lit(None).cast("double").alias("agg_value"),
-        "n_points",
-        F.lit(False).alias("persist"),
-        "quantile_values",
-        "quantile_probs",
-        "samples_sum",
-        "mean_value",
-        F.lit(None).cast("array<struct<bound:double,cnt:bigint>>").alias("hist"),
-    )
-    hist = agg_histograms(df).select(
-        *_group_cols(df),
-        "kind",
-        F.lit(None).cast("double").alias("agg_value"),
-        "n_points",
-        F.lit(False).alias("persist"),
-        F.lit(None).cast("array<double>").alias("quantile_values"),
-        F.lit(None).cast("array<double>").alias("quantile_probs"),
-        F.lit(None).cast("double").alias("samples_sum"),
-        F.lit(None).cast("double").alias("mean_value"),
-        "hist",
-    )
-    return scalar.unionByName(summ).unionByName(hist)
 
 
 # ---------------------------------------------------------------------------

@@ -1835,10 +1835,8 @@ def cdc_duplicate_chunks(
     occurrence counts.
 
     The per-position window hash is a column expression (transform over
-    the position sequence) so the DuckDB twin replays it exactly; at
-    true 100 TB the O(len·window) expression would hand off to an
-    O(len) rolling mapInPandas kernel — same boundaries, same chunks,
-    this declarative form stays as its oracle.
+    the position sequence, O(len·window) per document) so the DuckDB twin
+    replays it exactly.
 
     Plan: chunking is a narrow per-row map; ONE hash aggregate on the
     chunk groups the corpus's shared content (map-side combined; a
@@ -1936,73 +1934,3 @@ def cdc_oracle_sql(
         FROM ex WHERE length(chunk) >= {min_len}
         GROUP BY 1 HAVING count(DISTINCT id) > 1
     """
-
-
-def _cdc_chunk_batches(window: int, mask: int):
-    """Arrow-batched O(len) CDC chunker: the rolling window hashes are a
-    sliding-window dot product with the precomputed 31-power vector
-    (numpy, no per-char Python), mod 2^31−1 — bit-identical to the
-    declarative expression twin, at kernel speed."""
-    import numpy as np
-
-    M = (1 << 31) - 1
-    powers = np.array(
-        [pow(31, window - 1 - j, M) for j in range(window)], dtype=np.int64
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, chunks = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                L = len(text)
-                if L < window:
-                    ids.append(doc_id)
-                    chunks.append(text)
-                    continue
-                codes = np.frombuffer(
-                    text.encode("utf-32-le"), dtype=np.uint32
-                ).astype(np.int64)
-                win = np.lib.stride_tricks.sliding_window_view(codes, window)
-                h = (win % M @ powers) % M
-                # h[i] hashes chars [i, i+window): boundary position
-                # p = i + window (1-based end), matching the expression twin
-                bpos = np.flatnonzero(h % (mask + 1) == 0) + window
-                bounds = [0, *bpos.tolist(), L]
-                for a, b in zip(bounds, bounds[1:]):
-                    if b > a:
-                        ids.append(doc_id)
-                        chunks.append(text[a:b])
-            yield pd.DataFrame({"doc_id": ids, "chunk": chunks})
-
-    return gen
-
-
-def cdc_duplicate_chunks_fast(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 16,
-    mask: int = 63,
-    min_len: int = 32,
-) -> DataFrame:
-    """The 100 TB path for :func:`cdc_duplicate_chunks`: same boundaries,
-    same chunks (pytest asserts bit-equality against the declarative
-    twin), but chunking runs as an O(len) vectorized Arrow kernel
-    instead of the O(len·window) expression tree."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    ex = src.mapInPandas(
-        _cdc_chunk_batches(window, mask), "doc_id long, chunk string"
-    ).filter(F.length("chunk") >= min_len)
-    return (
-        ex.groupBy("chunk")
-        .agg(
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_occ"),
-        )
-        .filter(F.col("n_docs") > 1)
-        .select(
-            "chunk", F.length("chunk").alias("chunk_len"), "n_docs", "n_occ"
-        )
-    )

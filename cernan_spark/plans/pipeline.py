@@ -23,7 +23,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cernan_spark.functions.classify import explode_lines
+from cernan_spark.functions.classify import explode_lines, line_class
 from cernan_spark.functions.graphite import parse_graphite_lines
 from cernan_spark.functions.jsonlog import parse_json_logs
 from cernan_spark.functions.statsd import parse_statsd_lines
@@ -70,25 +70,8 @@ def parse_stage(
     # re-parsing would evaluate the whole statsd string scan twice per line).
     exploded = explode_lines(transcripts)
     parsed_all = parse_statsd_lines(exploded, masks=masks, keep_invalid=True)
-    from cernan_spark.functions.classify import (
-        CLASS_BAD, CLASS_GRAPHITE, CLASS_JSON, CLASS_LOG, CLASS_STATSD,
-    )
-    from cernan_spark.functions.graphite import GRAPHITE_LINE_RX
-
-    line = F.col("line")
     lines = parsed_all.withColumn(
-        "line_class",
-        F.when(F.col("is_valid"), F.lit(CLASS_STATSD))
-        .when(line.rlike(GRAPHITE_LINE_RX), F.lit(CLASS_GRAPHITE))
-        .when(line.startswith("{"), F.lit(CLASS_JSON))
-        .when(
-            (line == "")
-            | line.contains("|")
-            | (line.contains(":") & ~line.contains(" "))
-            | ~line.contains(" "),
-            F.lit(CLASS_BAD),
-        )
-        .otherwise(F.lit(CLASS_LOG)),
+        "line_class", line_class(F.col("line"), F.col("is_valid"))
     )
 
     # Telemetry = UNION of the statsd and graphite branches, each refiltering

@@ -1,18 +1,17 @@
-"""Driver-parity oracle gate: Arrow-schema + exact-value comparison.
-
-The r5 postmortem (VERDICT.md "What's wrong #2"): the original
-``check_oracle.py`` stringifies values with ``f"{v:.6g}"``, which is blind
-to column *types* — DuckDB ``sum(BIGINT)`` silently returns
-HUGEINT/decimal128(38,0) where Spark returns int64, and the driver's hash
-is type-sensitive, so four queries shipped red without the local gate
-noticing. This gate fetches BOTH sides as Arrow:
+"""Oracle gate: every ``__spark_entry__`` query, built and collected at
+one SF, compared with its DuckDB twin in ``oracle_sql()`` as Arrow:
 
 * schema parity: per-column Arrow type must be identical (int64 vs
-  decimal128(38,0) FAILS loudly);
+  decimal128(38,0) FAILS loudly — DuckDB ``sum(BIGINT)`` silently returns
+  HUGEINT where Spark returns int64, and the driver's hash is
+  type-sensitive);
 * value parity: order-insensitive exact comparison over ``repr`` of the
-  Python-converted values (no .6g truncation). Floats must be
-  bit-identical (the repo's pinned-fold discipline already guarantees
-  this for every oracled query).
+  Python-converted values (no rounding). Floats must be bit-identical
+  (the repo's pinned-fold discipline already guarantees this for every
+  oracled query).
+
+A query without an oracle is still built and collected; it reports
+``ok    <name>: rows-only (N rows)``, and an exception fails it.
 
 Usage: python scripts/check_oracle_arrow.py [sf_dir] [query ...]
 """
@@ -86,15 +85,15 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        if name not in oracles:
-            print(f"ok    {name}: rows-only (skipped)")
-            continue
         try:
             sdf = fn(spark, sf_dir)
             stbl = sdf.toArrow()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
             failures += 1
+            continue
+        if name not in oracles:
+            print(f"ok    {name}: rows-only ({stbl.num_rows} rows)")
             continue
         try:
             otbl = con.execute(oracles[name]).arrow()

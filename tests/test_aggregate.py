@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from cernan_spark.model import bucket_model
 from cernan_spark.operators.aggregate import (
     agg_histograms,
-    bucket_aggregate,
+    bucket_aggregate_onepass,
     gauge_carry_forward,
     gauge_running_value,
     prometheus_accumulate,
@@ -40,7 +40,7 @@ def test_sum_and_set_merge_laws(spark):
         ("gauge", 7.0, "SET", True, 111, 5),  # later order → wins
         ("gauge", 6.0, "SET", True, 105, 2),  # earlier order, same bin
     ]
-    agg = bucket_aggregate(_parsed_df(spark, rows), bin_width=60)
+    agg = bucket_aggregate_onepass(_parsed_df(spark, rows), bin_width=60)
     got = {
         (r["name"], r["bin"], r["kind"]): r["agg_value"]
         for r in agg.filter(F.col("kind").isin("SUM", "SET")).collect()
@@ -60,7 +60,7 @@ def test_sum_and_set_merge_laws(spark):
 def test_summarize_quantiles_within_eps(spark):
     vals = [float(i) for i in range(1, 101)]
     rows = [("t", v, "SUMMARIZE", False, 100, i) for i, v in enumerate(vals)]
-    agg = bucket_aggregate(_parsed_df(spark, rows), bin_width=3600)
+    agg = bucket_aggregate_onepass(_parsed_df(spark, rows), bin_width=3600)
     r = agg.filter(F.col("kind") == "SUMMARIZE").collect()[0]
     qs = dict(zip(r["quantile_probs"], r["quantile_values"]))
     # percentile_approx error bound: rank error < n/accuracy = 0.1

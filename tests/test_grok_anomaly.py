@@ -134,40 +134,22 @@ def test_label_centroids_partitioning_invariant(spark):
     assert len(a) == len({(l, i) for (l, i, _, _) in a})
 
 
-def test_grok_arrow_twin_matches_jvm_path(spark):
-    """The Arrow-batched grok twin (one str.extract pass per batch) is
-    row-identical to the JVM regexp_extract-per-field path."""
-    import __spark_entry__ as em
-    from cernan_spark.functions.grok import grok_extract_arrow
-
-    lines = em._apache_lines(spark, "/root/testdata/sf0.001")
-    jvm = grok_extract(lines, COMMON_APACHE_LOG)
-    arrow = grok_extract_arrow(lines, COMMON_APACHE_LOG)
-    assert jvm.columns == arrow.columns
-    assert jvm.exceptAll(arrow).count() == 0
-    assert arrow.exceptAll(jvm).count() == 0
-
-
-def test_grok_arrow_rejects_fieldless_template():
-    import pandas as pd
-    import pytest as _pytest
-
-    from cernan_spark.functions.grok import grok_template_batch
-
-    with _pytest.raises(ValueError):
-        grok_template_batch(pd.Series(["x"]), "%{INT}-%{INT}")
-
-
 def test_grok_syslog_line(spark):
     from cernan_spark.functions.groklib import SYSLOG_LINE
 
     good = "<13>1704067200 h7 click: evt 42 value 3.50"
-    df = spark.createDataFrame([(good,), ("no-pri evt 9",)], "text string")
+    # a captured field holding the \x01 field separator takes the
+    # per-field regexp_extract fallback
+    sep = "<13>1704067200 h7 click: evt \x01 42"
+    df = spark.createDataFrame(
+        [(good,), (sep,), ("no-pri evt 9",)], "text string"
+    )
     g = grok_extract(df, SYSLOG_LINE).collect()
     byline = {r["text"]: r for r in g}
     ok = byline[good]
     assert ok["grok_matched"] and ok["pri"] == "13" and ok["prog"] == "click"
     assert ok["msg"] == "evt 42 value 3.50"
+    assert byline[sep]["grok_matched"] and byline[sep]["msg"] == "evt \x01 42"
     assert not byline["no-pri evt 9"]["grok_matched"]
 
 

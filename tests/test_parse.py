@@ -9,7 +9,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from cernan_spark.functions.classify import classify_lines
+from cernan_spark.functions.classify import line_class
 from cernan_spark.functions.graphite import parse_graphite_lines
 from cernan_spark.functions.statsd import parse_statsd_lines
 from cernan_spark.model import classify_py, parse_statsd_py
@@ -137,6 +137,10 @@ def test_classify_vs_model(spark):
         "plain prose line here",
     ]
     df = spark.createDataFrame([(l,) for l in lines], "line string")
-    got = {r["line"]: r["line_class"] for r in classify_lines(df).collect()}
+    # the exact expression parse_stage runs: classify from parse validity
+    classified = parse_statsd_lines(df, keep_invalid=True).select(
+        "line", line_class(F.col("line"), F.col("is_valid")).alias("line_class")
+    )
+    got = {r["line"]: r["line_class"] for r in classified.collect()}
     for line in lines:
         assert got[line] == classify_py(line), line

@@ -662,31 +662,3 @@ def test_cdc_chunks_survive_prefix_shift(spark):
         if any(r["chunk"] in t for t in orig_texts)
     )
     assert cross_bytes > 500
-
-
-def test_cdc_fast_kernel_equals_declarative_twin(spark):
-    """The O(len) Arrow kernel and the O(len*window) expression twin
-    produce bit-identical duplicated-chunk tables (same boundaries,
-    same strings, same counts)."""
-    from pyspark.sql import functions as F
-
-    from cernan_spark.operators.dedup import (
-        cdc_duplicate_chunks,
-        cdc_duplicate_chunks_fast,
-    )
-
-    base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    twins = base.filter(F.col("doc_id") < 25).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        F.concat(F.lit("Z "), F.col("text")).alias("text"),
-    )
-    corpus = base.select("doc_id", "text").unionByName(twins)
-    slow = {
-        (r["chunk"], r["n_docs"], r["n_occ"])
-        for r in cdc_duplicate_chunks(corpus).collect()
-    }
-    fast = {
-        (r["chunk"], r["n_docs"], r["n_occ"])
-        for r in cdc_duplicate_chunks_fast(corpus).collect()
-    }
-    assert slow == fast and len(slow) > 0
