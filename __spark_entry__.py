@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from cernan_spark.functions.graphite import parse_graphite_lines
 from cernan_spark.functions.statsd import parse_statsd_lines
 from cernan_spark.operators.aggregate import (
-    agg_histograms,
+    bucket_aggregate_onepass,
     gauge_carry_forward,
     prometheus_accumulate,
     zero_pad,
@@ -220,9 +220,8 @@ def q_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         _parsed(spark, sf_dir)
         .filter((F.col("name") == "errors"))
         .withColumn("kind", F.lit("HISTOGRAM"))
-        .withColumn("bin", F.floor(F.col("epoch") / 3600).cast("long"))
     )
-    h = agg_histograms(p)
+    h = bucket_aggregate_onepass(p, bin_width=3600)
     return h.select(
         "name", "bin",
         F.posexplode("hist").alias("bucket_idx", "b"),
@@ -315,9 +314,8 @@ def q_prometheus_cumulative_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         _parsed(spark, sf_dir)
         .filter(F.col("name") == "errors")
         .withColumn("kind", F.lit("HISTOGRAM"))
-        .withColumn("bin", F.floor(F.col("epoch") / 3600).cast("long"))
     )
-    h = agg_histograms(p).select(
+    h = bucket_aggregate_onepass(p, bin_width=3600).select(
         "name", "bin", "kind",
         F.lit(None).cast("double").alias("agg_value"),
         "n_points", "hist",
@@ -540,8 +538,9 @@ def q_console_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
             nul("array<struct<bound:double,cnt:bigint>>").alias("hist"),
         )
     )
-    hist = agg_histograms(
-        p.filter(F.col("name") == "errors").withColumn("kind", F.lit("HISTOGRAM"))
+    hist = bucket_aggregate_onepass(
+        p.filter(F.col("name") == "errors").withColumn("kind", F.lit("HISTOGRAM")),
+        bin_width=3600,
     ).select(
         "name", "bin", F.lit("HISTOGRAM").alias("kind"),
         nul("double").alias("agg_value"),
@@ -1908,10 +1907,12 @@ def q_prometheus_exposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("kind").isin("SUM", "SET"))
         .withColumn("name", F.concat("name", F.lit(".raw-total")))
     )
-    hist = agg_histograms(
+    # one all-time bin: every point at epoch 0
+    hist = bucket_aggregate_onepass(
         p.filter(F.col("name") == "errors")
         .withColumn("kind", F.lit("HISTOGRAM"))
-        .withColumn("bin", F.lit(0).cast("long"))
+        .withColumn("ts", F.timestamp_seconds(F.lit(0))),
+        bin_width=3600,
     ).select(
         F.concat("name", F.lit(".raw-total")).alias("name"),
         "kind",

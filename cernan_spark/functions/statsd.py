@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cernan_spark.operators.aggregate import MAX_HIST_BUCKETS
+
 KIND_SUM = "SUM"
 KIND_SET = "SET"
 KIND_SUMMARIZE = "SUMMARIZE"
@@ -113,16 +115,32 @@ def mask_bounds_expr(masks: DataFrame, name_col: str = "name") -> Column:
     """First-match-wins name→bounds CASE chain compiled from the tiny mask
     rules table (collected driver-side): a pure codegen'd expression — no
     join/window/shuffle on the fact table. The reference scans masks
-    linearly per metric the same way (statsd.rs:105-115)."""
+    linearly per metric the same way (statsd.rs:105-115).
+
+    Raises ``ValueError`` naming the mask of a rule whose bounds the bucket
+    aggregate cannot hold: more than ``MAX_HIST_BUCKETS`` of them, or not
+    strictly ascending (a bucket is labelled by the first bound at or
+    above its values)."""
     rules = sorted(
         masks.select("mask", "bounds", "priority").collect(),
         key=lambda r: r["priority"],
     )
     expr = F.lit(None).cast("array<double>")
     for r in reversed(rules):
+        bounds = [float(b) for b in r["bounds"]]
+        if len(bounds) > MAX_HIST_BUCKETS:
+            raise ValueError(
+                f"histogram mask {r['mask']!r}: {len(bounds)} bounds, "
+                f"at most {MAX_HIST_BUCKETS} allowed"
+            )
+        if not all(lo < hi for lo, hi in zip(bounds, bounds[1:])):
+            raise ValueError(
+                f"histogram mask {r['mask']!r}: bounds {bounds} are not "
+                "strictly ascending"
+            )
         expr = F.when(
             F.col(name_col).rlike(r["mask"]),
-            F.array(*[F.lit(float(b)) for b in r["bounds"]]),
+            F.array(*[F.lit(b) for b in bounds]),
         ).otherwise(expr)
     return expr
 

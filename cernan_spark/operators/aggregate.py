@@ -7,7 +7,9 @@ src/metric/telemetry.rs:94-137):
   bin_width)`` (integer-division bins, telemetry.rs:816-828);
 * merge laws within a group: Sum = addition, Set = last-write-wins (by the
   stable order key), Summarize = sketch union (→ percentile_approx) plus
-  exact sum/count/mean, Histogram = bin-wise count addition;
+  exact sum/count/mean, Histogram = bin-wise count addition over fixed
+  bounds, which come from the statsd mask rules (``bounds_expr``, see
+  :func:`bucket_aggregate_onepass`; an input ``bounds`` column is ignored);
 * gauge persistence: a persisted series' value carries forward across bins
   and survives flushes (buckets.rs:100-116,163-175) — implemented as an
   ordered running fold, see :func:`gauge_carry_forward`.
@@ -28,17 +30,24 @@ from pyspark.sql import functions as F
 DEFAULT_QUANTILES = [0.0, 0.25, 0.5, 0.75, 0.9, 0.95, 0.99, 0.999, 1.0]
 #: CKMS default error bound ε=0.001 → percentile_approx accuracy ≈ 1/ε
 DEFAULT_ACCURACY = 1000
+#: Histogram bounds of a series no mask rule names (reference default
+#: bounds, src/metric/telemetry.rs:429-438)
+DEFAULT_BOUNDS = [1.0, 10.0, 100.0, 1000.0]
+#: most bounds one Histogram may carry: the aggregate keeps one count arm
+#: per bound plus the +Inf bucket (``statsd.mask_bounds_expr`` enforces it)
+MAX_HIST_BUCKETS = 8
+
+
+def event_epoch_expr(df: DataFrame, ts_col: str = "ts") -> Column:
+    """Event time in epoch seconds: a row's own ``event_epoch`` (graphite
+    lines carry one) when the frame has that column, else its ``ts``."""
+    ts = F.unix_timestamp(F.col(ts_col))
+    return F.coalesce(F.col("event_epoch"), ts) if "event_epoch" in df.columns else ts
 
 
 def with_bin(df: DataFrame, bin_width: int, ts_col: str = "ts") -> DataFrame:
     """Tumbling integer-division bin: floor(epoch_seconds / bin_width)."""
-    epoch = (
-        F.col("event_epoch")
-        if "event_epoch" in df.columns
-        else F.unix_timestamp(F.col(ts_col))
-    )
-    if "event_epoch" in df.columns:
-        epoch = F.coalesce(F.col("event_epoch"), F.unix_timestamp(F.col(ts_col)))
+    epoch = event_epoch_expr(df, ts_col)
     return df.withColumn("bin", F.floor(epoch / F.lit(bin_width)).cast("long"))
 
 
@@ -49,69 +58,12 @@ def _group_cols(df: DataFrame) -> list[str]:
     return cols
 
 
-def agg_histograms(
-    df: DataFrame, default_bounds: list[float] | None = None
-) -> DataFrame:
-    """kind=HISTOGRAM: fixed-bound bins, bin-wise count addition
-    (telemetry.rs:127-137,429-438). value ≤ bound → that bucket; above all
-    bounds → the +Inf bucket (index = size(bounds)).
-
-    Two-phase: per-(key,bucket) count (the big shuffle, map-side combined),
-    then tiny per-key pivot into an ordered bucket array.
-    """
-    bounds_col = (
-        F.col("bounds")
-        if "bounds" in df.columns
-        else F.lit(None).cast("array<double>")
-    )
-    db = default_bounds or [1.0, 10.0, 100.0, 1000.0]
-    bounds = F.coalesce(bounds_col, F.array(*[F.lit(b) for b in db]))
-    h = df.filter(F.col("kind") == "HISTOGRAM").withColumn("_bounds", bounds)
-    # index of first bound >= value == count of bounds < value
-    h = h.withColumn(
-        "bucket_idx",
-        F.size(F.filter(F.col("_bounds"), lambda b: b < F.col("value"))),
-    )
-    per_bucket = h.groupBy(*_group_cols(h), "_bounds", "bucket_idx").agg(
-        F.count("*").alias("cnt")
-    )
-    return (
-        per_bucket.groupBy(*_group_cols(per_bucket), "_bounds")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("bucket_idx"), F.col("cnt")))
-            ).alias("_sparse"),
-            F.sum("cnt").alias("n_points"),
-        )
-        .withColumn(
-            # densify: one entry per bound + the +Inf bucket
-            "hist",
-            F.transform(
-                F.concat(F.col("_bounds"), F.array(F.lit(float("inf")))),
-                lambda b, i: F.struct(
-                    b.alias("bound"),
-                    F.coalesce(
-                        F.element_at(
-                            F.map_from_entries(F.col("_sparse")), i.cast("int")
-                        ),
-                        F.lit(0).cast("long"),
-                    ).alias("cnt"),
-                ),
-            ),
-        )
-        .withColumnRenamed("_bounds", "bounds")
-        .drop("_sparse")
-        .withColumn("kind", F.lit("HISTOGRAM"))
-    )
-
-
 def bucket_aggregate_onepass(
     parsed: DataFrame,
     bin_width: int = 60,
     quantiles: list[float] | None = None,
     accuracy: int = DEFAULT_ACCURACY,
     order_col: str = "order_key",
-    max_hist_buckets: int = 8,
     bounds_expr: Column | None = None,
 ) -> DataFrame:
     """All four merge laws in ONE hash aggregate (one scan, one shuffle).
@@ -122,30 +74,29 @@ def bucket_aggregate_onepass(
       SUM → sum(value)   SET → max_by(value, order)
       SUMMARIZE → percentile_approx sketch + exact sum/count/mean
       HISTOGRAM → per-bucket conditional counts (bucket index precomputed
-      per row), re-zipped with the group's bounds post-agg
+      per row), re-zipped with the group's bounds post-agg; value ≤ bound
+      → that bucket, above all bounds → the +Inf bucket
 
-    Input needs (name, value, kind, persist[, bounds], ts|event_epoch,
-    order_key[, tags_key]). ``bounds_expr`` is the name→bounds CASE chain
-    (``statsd.mask_bounds_expr``) that labels the histogram buckets;
-    without it they carry the default bounds.
+    Input needs (name, value, kind, persist, ts|event_epoch,
+    order_key[, tags_key]). The Histogram bounds come only from
+    ``bounds_expr``, the name→bounds CASE chain
+    (``statsd.mask_bounds_expr``), falling back to :data:`DEFAULT_BOUNDS`
+    where it is null; without it every Histogram carries the default
+    bounds. An input ``bounds`` column is ignored.
     """
     qs = quantiles or DEFAULT_QUANTILES
     df = with_bin(parsed, bin_width)
     group = _group_cols(df) + ["kind"]
 
-    has_bounds = "bounds" in df.columns
-    db = [1.0, 10.0, 100.0, 1000.0]
-    if bounds_expr is None and has_bounds:
-        bounds = F.coalesce(F.col("bounds"), F.array(*[F.lit(b) for b in db]))
-    elif bounds_expr is not None:
-        bounds = F.coalesce(bounds_expr, F.array(*[F.lit(b) for b in db]))
-    else:
-        bounds = F.array(*[F.lit(b) for b in db])
-    df = df.withColumn("_bounds", F.when(F.col("kind") == "HISTOGRAM", bounds))
+    # one expression buckets the rows and labels the buckets
+    default = F.array(*[F.lit(b) for b in DEFAULT_BOUNDS])
+    bounds = default if bounds_expr is None else F.coalesce(bounds_expr, default)
+    is_hist = F.col("kind") == "HISTOGRAM"
+    df = df.withColumn("_bounds", F.when(is_hist, bounds))
     df = df.withColumn(
         "_bidx",
         F.when(
-            F.col("kind") == "HISTOGRAM",
+            is_hist,
             F.size(F.filter(F.col("_bounds"), lambda b: b < F.col("value"))),
         ),
     )
@@ -171,7 +122,7 @@ def bucket_aggregate_onepass(
             F.sum(F.when(F.col("_bidx") == i, F.lit(1)).otherwise(F.lit(0))).alias(
                 f"_hb{i}"
             )
-            for i in range(max_hist_buckets + 1)
+            for i in range(MAX_HIST_BUCKETS + 1)
         ],
     ]
     g = df.groupBy(*group).agg(*aggs)
@@ -180,15 +131,10 @@ def bucket_aggregate_onepass(
     # the same expression instead of dragging an array through the
     # aggregation buffer (arrays in ObjectHashAggregate buffers are the
     # single most expensive component of a wide agg).
-    hist_counts = F.array(*[F.col(f"_hb{i}") for i in range(max_hist_buckets + 1)])
-    post_bounds = (
-        F.coalesce(bounds_expr, F.array(*[F.lit(b) for b in db]))
-        if bounds_expr is not None
-        else F.array(*[F.lit(b) for b in db])
-    )
-    all_bounds = F.concat(post_bounds, F.array(F.lit(float("inf"))))
+    hist_counts = F.array(*[F.col(f"_hb{i}") for i in range(MAX_HIST_BUCKETS + 1)])
+    all_bounds = F.concat(bounds, F.array(F.lit(float("inf"))))
     hist = F.when(
-        F.col("kind") == "HISTOGRAM",
+        is_hist,
         F.transform(
             all_bounds,
             lambda b, i: F.struct(
@@ -652,11 +598,7 @@ def prometheus_windowed_summaries(
     age filter (pushed into the scan) then one sketch aggregate per name."""
     qs = quantiles or DEFAULT_QUANTILES
     q_arr = F.array(*[F.lit(q) for q in qs])
-    epoch = (
-        F.coalesce(F.col("event_epoch"), F.unix_timestamp(F.col("ts")))
-        if "event_epoch" in parsed.columns
-        else F.unix_timestamp(F.col("ts"))
-    )
+    epoch = event_epoch_expr(parsed)
     live = parsed.filter(
         (F.col("kind") == "SUMMARIZE")
         & (epoch > F.lit(now_epoch - capacity_seconds))

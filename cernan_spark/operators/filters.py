@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cernan_spark.operators.aggregate import event_epoch_expr
 from cernan_spark.sources.dimensions import local_table
 
 
@@ -24,11 +25,7 @@ def delay_filter(
     by Catalyst when ts maps to a partition column.
     """
     ref = F.lit(ref_epoch) if isinstance(ref_epoch, int) else ref_epoch
-    epoch = (
-        F.coalesce(F.col("event_epoch"), F.unix_timestamp(F.col(ts_col)))
-        if "event_epoch" in df.columns
-        else F.unix_timestamp(F.col(ts_col))
-    )
+    epoch = event_epoch_expr(df, ts_col)
     return df.filter(F.abs(epoch - ref) < F.lit(tolerance_seconds))
 
 

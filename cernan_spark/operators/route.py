@@ -18,6 +18,32 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _match(
+    df: DataFrame,
+    rules: DataFrame,
+    id_col: str,
+    how: str,
+    kind_col: str,
+    name_col: str,
+) -> DataFrame:
+    """Join ``df`` to the broadcast rules (``id_col``, match_kind,
+    name_mask, sink): a rule matches a row when its ``match_kind`` equals
+    ``df[kind_col]`` and its ``name_mask`` regex matches ``df[name_col]``.
+    Keeps ``id_col`` and ``sink`` from the rule side."""
+    r = F.broadcast(
+        rules.select(
+            id_col,
+            F.col("match_kind").alias("_mk"),
+            F.col("name_mask").alias("_mask"),
+            "sink",
+        )
+    )
+    cond = (F.col(kind_col) == F.col("_mk")) & F.regexp_like(
+        F.col(name_col), F.col("_mask")
+    )
+    return df.join(r, cond, how).drop("_mk", "_mask")
+
+
 def route(
     df: DataFrame,
     routes: DataFrame,
@@ -29,18 +55,7 @@ def route(
     ``df[kind_col]`` is the event class ('telemetry' | 'log' | 'raw');
     ``name_mask`` is a regex over the metric name (or log path).
     """
-    r = F.broadcast(
-        routes.select(
-            "rule_id",
-            F.col("match_kind").alias("_mk"),
-            F.col("name_mask").alias("_mask"),
-            "sink",
-        )
-    )
-    cond = (F.col(kind_col) == F.col("_mk")) & F.regexp_like(
-        F.col(name_col), F.col("_mask")
-    )
-    return df.join(r, cond, "inner").drop("_mk", "_mask")
+    return _match(df, routes, "rule_id", "inner", kind_col, name_col)
 
 
 def unrouted(
@@ -50,13 +65,7 @@ def unrouted(
     name_col: str = "name",
 ) -> DataFrame:
     """Events matching no route — dropped with count (anti join)."""
-    r = F.broadcast(
-        routes.select(F.col("match_kind").alias("_mk"), F.col("name_mask").alias("_mask"))
-    )
-    cond = (F.col(kind_col) == F.col("_mk")) & F.regexp_like(
-        F.col(name_col), F.col("_mask")
-    )
-    return df.join(r, cond, "left_anti")
+    return _match(df, routes, "rule_id", "left_anti", kind_col, name_col)
 
 
 def routed_counts(routed: DataFrame) -> DataFrame:
@@ -102,29 +111,11 @@ def route_preflight(
     runs once over the stream and the diff is a sink-grain pivot —
     at 100 TB the preflight costs one routed pass, not two.
     """
-    tagged = routes_current.select(
-        F.lit("cur").alias("_v"), "rule_id", "match_kind", "name_mask", "sink"
-    ).unionByName(
-        routes_proposed.select(
-            F.lit("new").alias("_v"),
-            "rule_id",
-            "match_kind",
-            "name_mask",
-            "sink",
-        )
+    cols = ["match_kind", "name_mask", "sink"]
+    tagged = routes_current.select(F.lit("cur").alias("_v"), *cols).unionByName(
+        routes_proposed.select(F.lit("new").alias("_v"), *cols)
     )
-    r = F.broadcast(
-        tagged.select(
-            "_v",
-            F.col("match_kind").alias("_mk"),
-            F.col("name_mask").alias("_mask"),
-            "sink",
-        )
-    )
-    cond = (F.col(kind_col) == F.col("_mk")) & F.regexp_like(
-        F.col(name_col), F.col("_mask")
-    )
-    hits = df.join(r, cond, "inner")
+    hits = _match(df, tagged, "_v", "inner", kind_col, name_col)
     return (
         hits.groupBy("sink")
         .agg(

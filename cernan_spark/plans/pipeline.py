@@ -26,10 +26,13 @@ from pyspark.sql import functions as F
 from cernan_spark.functions.classify import explode_lines, line_class
 from cernan_spark.functions.graphite import parse_graphite_lines
 from cernan_spark.functions.jsonlog import parse_json_logs
-from cernan_spark.functions.statsd import parse_statsd_lines
-from cernan_spark.operators.aggregate import prometheus_accumulate
+from cernan_spark.functions.statsd import mask_bounds_expr, parse_statsd_lines
+from cernan_spark.operators.aggregate import (
+    bucket_aggregate_onepass,
+    event_epoch_expr,
+)
 from cernan_spark.operators.enrich import enrich_tags_fast
-from cernan_spark.operators.route import route, routed_counts, unrouted
+from cernan_spark.operators.route import route, routed_counts
 from cernan_spark.sources.dimensions import (
     default_histogram_masks,
     default_routes,
@@ -45,7 +48,6 @@ class PipelineConfig:
         default_factory=lambda: [0.0, 0.25, 0.5, 0.75, 0.9, 0.95, 0.99, 0.999, 1.0]
     )
     accuracy: int = 1000
-    with_tags: bool = True
     #: per-sink late/early-data rejection window in seconds (wavefront
     #: age_threshold, wavefront.rs:643-651; None = accept everything).
     #: Batch 'now' = the input's max event time.
@@ -145,11 +147,7 @@ def run_pipeline(
 
         telemetry_unfiltered = telemetry
 
-        now_ref = telemetry.agg(
-            F.max(F.coalesce(F.col("event_epoch"), F.unix_timestamp("ts"))).alias(
-                "_now"
-            )
-        )
+        now_ref = telemetry.agg(F.max(event_epoch_expr(telemetry)).alias("_now"))
         # wavefront's bound is inclusive (<=, wavefront.rs:645) while
         # DelayFilter's is strict (<); +1 on integer seconds makes the
         # strict filter inclusive at the configured threshold
@@ -159,11 +157,10 @@ def run_pipeline(
             F.col("_now"),
         ).drop("_now")
 
-    if cfg.with_tags:
-        # transcripts carry no event tags → the precomputed-combo fast path
-        # (one projection over literal maps, no join, no per-row map merging)
-        telemetry = enrich_tags_fast(telemetry, tag_dicts)
-        logs = enrich_tags_fast(logs, tag_dicts)
+    # transcripts carry no event tags → the precomputed-combo fast path
+    # (one projection over literal maps, no join, no per-row map merging)
+    telemetry = enrich_tags_fast(telemetry, tag_dicts)
+    logs = enrich_tags_fast(logs, tag_dicts)
 
     telemetry = telemetry.withColumn("match_kind_value", F.lit("telemetry"))
     logs = logs.withColumn("match_kind_value", F.lit("log")).withColumn(
@@ -172,16 +169,12 @@ def run_pipeline(
 
     routed_tel = route(telemetry, routes)
     routed_logs = route(logs, routes)
-    dropped = unrouted(telemetry, routes)
 
     # Aggregate ONCE on the un-fanned telemetry (one scan, one shuffle via
     # bucket_aggregate_onepass), then fan the per-series aggregates out to
     # sinks with a broadcast route join — the fan-out multiplies tiny
     # aggregate rows, not raw events. Valid because sinks share bin_width;
     # per-sink widths would fold `sink` into the aggregate's group key.
-    from cernan_spark.functions.statsd import mask_bounds_expr
-    from cernan_spark.operators.aggregate import bucket_aggregate_onepass
-
     agg_once = bucket_aggregate_onepass(
         telemetry, bin_width=cfg.bin_width, quantiles=cfg.quantiles,
         accuracy=cfg.accuracy, bounds_expr=mask_bounds_expr(masks),
@@ -190,19 +183,13 @@ def run_pipeline(
         agg_once.withColumn("match_kind_value", F.lit("telemetry")), routes
     ).drop("match_kind_value", "rule_id")
 
-    prom = prometheus_accumulate(
-        agg.filter(F.col("sink") == "prometheus"), ["sink", "name", "kind"]
-    )
-
     result = {
         "telemetry": telemetry,
         "logs": logs,
         "bad": bad,
         "routed_telemetry": routed_tel,
         "routed_logs": routed_logs,
-        "dropped": dropped,
         "aggregates": agg,
-        "prometheus": prom,
         "sink_counts": routed_counts(
             routed_tel.select("sink").unionByName(routed_logs.select("sink"))
         ),

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from cernan_spark.operators.aggregate import (
+    event_epoch_expr,
     prometheus_accumulate,
     prometheus_reject_kind_changes,
     prometheus_windowed_summaries,
@@ -40,12 +41,9 @@ def _prometheus_summaries(routed_points: DataFrame, capacity_s: int) -> DataFram
     """Windowed Summarize quantiles for the exposition: batch 'now' is the
     routed points' max event time (one tiny driver action over an
     aggregate, not a per-row collect)."""
-    epoch = F.coalesce(
-        F.col("event_epoch") if "event_epoch" in routed_points.columns
-        else F.lit(None).cast("long"),
-        F.unix_timestamp("ts"),
-    )
-    now_row = routed_points.agg(F.max(epoch).alias("mx")).collect()[0]
+    now_row = routed_points.agg(
+        F.max(event_epoch_expr(routed_points)).alias("mx")
+    ).collect()[0]
     now_epoch = now_row["mx"] if now_row["mx"] is not None else 0
     return prometheus_windowed_summaries(
         routed_points, capacity_seconds=capacity_s, now_epoch=now_epoch

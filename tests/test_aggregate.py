@@ -9,12 +9,10 @@ from pyspark.sql import functions as F
 
 from cernan_spark.model import bucket_model
 from cernan_spark.operators.aggregate import (
-    agg_histograms,
     bucket_aggregate_onepass,
     gauge_carry_forward,
     gauge_running_value,
     prometheus_accumulate,
-    with_bin,
     zero_pad,
 )
 
@@ -79,8 +77,8 @@ def test_histogram_bucketing(spark):
         ("h", 50.0, "HISTOGRAM", False, 13, 4),
         ("h", 5000.0, "HISTOGRAM", False, 14, 5),  # overflow → +Inf
     ]
-    df = with_bin(_parsed_df(spark, rows), 3600)
-    out = agg_histograms(df).collect()[0]
+    agg = bucket_aggregate_onepass(_parsed_df(spark, rows), bin_width=3600)
+    out = agg.collect()[0]
     counts = {e["bound"]: e["cnt"] for e in out["hist"]}
     assert counts[1.0] == 2
     assert counts[10.0] == 1
@@ -88,6 +86,22 @@ def test_histogram_bucketing(spark):
     assert counts[1000.0] == 0
     assert counts[float("inf")] == 1
     assert out["n_points"] == 5
+
+
+def test_histogram_ignores_bounds_column(spark):
+    """The bounds come from ``bounds_expr`` alone: a per-row ``bounds``
+    column buckets nothing, so every count sits under the label its
+    values fall at or below."""
+    values = [3.0, 30.0]
+    df = _parsed_df(
+        spark, [("h", v, "HISTOGRAM", False, 10, i) for i, v in enumerate(values)]
+    ).withColumn("bounds", F.array(F.lit(5.0), F.lit(50.0)))
+    out = bucket_aggregate_onepass(df, bin_width=3600).collect()[0]
+    labels = [e["bound"] for e in out["hist"]]
+    want = {b: 0 for b in labels}
+    for v in values:
+        want[min(b for b in labels if v <= b)] += 1
+    assert {e["bound"]: e["cnt"] for e in out["hist"]} == want
 
 
 def test_gauge_statsd_scenario(spark):

@@ -4,10 +4,12 @@ from BASELINE.json)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cernan_spark.model import classify_py, parse_statsd_py
 from cernan_spark.plans.pipeline import run_pipeline
+from cernan_spark.sources.dimensions import MASK_SCHEMA, local_table
 from cernan_spark.sources.transcripts import synthetic_transcripts
 
 
@@ -90,3 +92,17 @@ def test_per_turn_text_equality_stable_order(spark):
         t.groupBy("conv_id", "turn_idx").count().filter(F.col("count") > 1).count()
     )
     assert dup == 0
+
+
+@pytest.mark.parametrize(
+    "bounds",
+    [[float(b) for b in range(1, 10)], [100.0, 10.0, 1.0]],
+    ids=["nine_bounds", "descending"],
+)
+def test_bad_mask_bounds_rejected_at_build(spark, bounds):
+    """A mask rule the bucket aggregate cannot hold (more than 8 bounds, or
+    bounds not strictly ascending) fails the plan build, naming the mask."""
+    masks = local_table(spark, [("^errors$", bounds, 1)], MASK_SCHEMA)
+    t = synthetic_transcripts(spark, n_convs=2, turns_per_conv=2, seed=1)
+    with pytest.raises(ValueError, match=r"\^errors\$"):
+        run_pipeline(spark, t, masks=masks)
