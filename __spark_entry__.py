@@ -32,7 +32,7 @@ from cernan_spark.operators.aggregate import (
     prometheus_accumulate,
     zero_pad,
 )
-from cernan_spark.operators.enrich import enrich_tags
+from cernan_spark.operators.enrich import enrich_tags_fast
 from cernan_spark.operators.filters import delay_filter_counts, flush_boundary_filter
 from cernan_spark.operators.route import route, routed_counts
 from cernan_spark.sources.dimensions import default_routes, default_tag_dicts
@@ -282,7 +282,7 @@ def q_enrich_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     role→origin and tool→tool_class dictionaries."""
     _utc(spark)
     t = transcripts_from_events(spark, sf_dir)
-    e = enrich_tags(t, default_tag_dicts(spark))
+    e = enrich_tags_fast(t, default_tag_dicts(spark))
     return (
         e.select(
             "role",

@@ -7,7 +7,9 @@ Builds the SAME query plans bench.py times, but:
 * labels each job (guide §1.5) so the UI/event log is attributable;
 * dumps ``.explain("formatted")`` for every query to ``plans/<tag>/`` so
   plan-shape claims (Exchange count, join strategy, PushedFilters) are
-  checkable offline.
+  checkable offline. The synthetic input's temporary directory is written
+  as ``<synth>``, so two dumps of the same code are byte-identical and
+  ``diff -r`` of the dumps at two commits shows only plan changes.
 
 bench.py itself is FROZEN for driver measurement; this file is the
 builder's own instrumentation and its numbers are only cited as evidence
@@ -112,7 +114,8 @@ def main() -> None:
         for name, df in dfs.items():
             p = os.path.join(args.plans_dir, f"{name}{args.suffix}.txt")
             with open(p, "w") as fh:
-                fh.write(df._jdf.queryExecution().explainString(mode))
+                plan = df._jdf.queryExecution().explainString(mode)
+                fh.write(plan.replace(synth_dir, "<synth>"))
 
     if args.plan_only:
         import shutil

@@ -167,113 +167,30 @@ def bucket_aggregate_onepass(
 # gauge persistence / carry-forward
 # ---------------------------------------------------------------------------
 
-def gauge_running_value(
-    gauges: DataFrame,
-    key_cols: list[str] | None = None,
-    order_col: str = "order_key",
-    chunk_size: int = 1 << 20,
-) -> DataFrame:
-    """The statsd gauge fold: Set replaces, signed-delta Sum adds, in stable
-    order (reference test fitness_for_statsd_gauge, src/buckets.rs:240-309).
-
-    ``chunk_size`` trades parallelism for per-chunk task size: a hot series
-    with P points spreads over P/chunk_size tasks (1M-point chunks sort
-    comfortably in one task; small inputs collapse to one chunk and pay no
-    extra stages beyond the tiny chunk merge).
-
-    Scale-safe segmented scan — a hot series does NOT serialize into one
-    task (the whole-series ``Window.partitionBy(name)`` form puts every
-    point of a popular gauge in a single partition; at 100 TB that is the
-    job's critical path). Instead:
-
-    1. rows are chunked by ``floor(order_key / chunk_size)`` — the intra-
-       chunk fold runs per (series, chunk) partition, in parallel;
-    2. a per-chunk summary (has_set, chunk-final value — absolute if the
-       chunk saw a SET, else the chunk's delta total) is merged per series
-       with one ordered window over the tiny chunk table (rows = points /
-       chunk_size);
-    3. each chunk's carry-in (running value at the end of the previous
-       chunk) joins back and offsets rows before the chunk's first SET.
-
-    Identical output to the whole-series fold (pytest-asserted), but the
-    big window is keyed (series, chunk) → parallelism scales with data.
-    """
-    keys = key_cols or (["name", "tags_key"] if "tags_key" in gauges.columns else ["name"])
-    is_set_c = F.col("kind") == "SET"
-    df = gauges.withColumn(
-        "_chunk", F.floor(F.col(order_col) / F.lit(chunk_size)).cast("long")
+def _fill_bins(per_bin: DataFrame, keys: list[str], stop: Column | None = None) -> DataFrame:
+    """Every per-bin row plus one row per empty bin up to (exclusive) the
+    series' next observed bin — or, after the series' last bin, up to
+    (exclusive) ``stop`` when one is given. Each added row copies the columns of the
+    observed row before it; ``_i`` is 0 on the observed row and counts the
+    added ones. Join-free: one ``lead`` window plus one explode over the
+    per-bin table."""
+    nxt = F.lead("bin").over(W.partitionBy(*keys).orderBy("bin"))
+    if stop is not None:
+        nxt = F.coalesce(nxt, stop)
+    gap_seq = F.when(
+        nxt.isNotNull() & (nxt > F.col("bin") + 1),
+        F.sequence(F.col("bin") + 1, nxt - 1),
     )
-
-    # 1. intra-chunk segmented fold (partitioned by (keys, chunk))
-    wc = W.partitionBy(*keys, "_chunk").orderBy(order_col)
-    seg = F.sum(is_set_c.cast("long")).over(wc.rowsBetween(W.unboundedPreceding, 0))
-    df = df.withColumn("_seg", seg)
-    wseg = W.partitionBy(*keys, "_chunk", "_seg").orderBy(order_col)
-    base = F.first(F.when(is_set_c, F.col("value")), ignorenulls=True).over(
-        wseg.rowsBetween(W.unboundedPreceding, 0)
-    )
-    deltas = F.sum(
-        F.when(F.col("kind") == "SUM", F.col("value")).otherwise(F.lit(0.0))
-    ).over(wseg.rowsBetween(W.unboundedPreceding, 0))
-    # absolute once a SET was seen in this chunk (_seg > 0); else the
-    # chunk-relative delta prefix sum
-    df = df.withColumn("_intra", F.coalesce(base, F.lit(0.0)) + deltas)
-
-    # 2. per-chunk summary + per-series ordered merge (tiny table)
-    chunks = df.groupBy(*keys, "_chunk").agg(
-        F.max(is_set_c).alias("_has_set"),
-        F.max_by("_intra", F.col(order_col)).alias("_final"),
-    )
-    w2 = W.partitionBy(*keys).orderBy("_chunk")
-    seg2 = F.sum(F.col("_has_set").cast("long")).over(
-        w2.rowsBetween(W.unboundedPreceding, 0)
-    )
-    chunks = chunks.withColumn("_seg2", seg2)
-    w3 = W.partitionBy(*keys, "_seg2").orderBy("_chunk")
-    base2 = F.first(F.when(F.col("_has_set"), F.col("_final")), ignorenulls=True).over(
-        w3.rowsBetween(W.unboundedPreceding, 0)
-    )
-    rel = F.sum(
-        F.when(~F.col("_has_set"), F.col("_final")).otherwise(F.lit(0.0))
-    ).over(w3.rowsBetween(W.unboundedPreceding, 0))
-    carry_out = F.coalesce(base2, F.lit(0.0)) + rel
-    carry = chunks.withColumn(
-        "_carry_in", F.lag(carry_out, 1, 0.0).over(w2)
-    ).select(*keys, "_chunk", "_carry_in")
-
-    # 3. offset pre-SET rows by the previous chunk's closing value
-    out = df.join(carry, [*keys, "_chunk"], "left").withColumn(
-        "running_value",
-        F.when(F.col("_seg") > 0, F.col("_intra")).otherwise(
-            F.coalesce(F.col("_carry_in"), F.lit(0.0)) + F.col("_intra")
+    return per_bin.withColumn(
+        "_bins",
+        F.concat(
+            F.array(F.col("bin")),
+            F.coalesce(gap_seq, F.array().cast("array<bigint>")),
         ),
+    ).select(
+        *[c for c in per_bin.columns if c != "bin"],
+        F.posexplode("_bins").alias("_i", "bin"),
     )
-    return out.drop("_chunk", "_seg", "_intra", "_carry_in")
-
-
-def gauge_running_value_global(
-    gauges: DataFrame,
-    key_cols: list[str] | None = None,
-    order_col: str = "order_key",
-) -> DataFrame:
-    """Whole-series-window form of :func:`gauge_running_value` — one task
-    per series. Kept only as the pytest equality reference; do not use in
-    pipelines (hot series serialize)."""
-    keys = key_cols or (["name", "tags_key"] if "tags_key" in gauges.columns else ["name"])
-    w = W.partitionBy(*keys).orderBy(order_col)
-    is_set = (F.col("kind") == "SET").cast("long")
-    seg = F.sum(is_set).over(w.rowsBetween(W.unboundedPreceding, 0))
-    df = gauges.withColumn("_seg", seg)
-    wseg = W.partitionBy(*keys, "_seg").orderBy(order_col)
-    base = F.first(
-        F.when(F.col("kind") == "SET", F.col("value")), ignorenulls=True
-    ).over(wseg.rowsBetween(W.unboundedPreceding, 0))
-    deltas = F.sum(
-        F.when(F.col("kind") == "SUM", F.col("value")).otherwise(F.lit(0.0))
-    ).over(wseg.rowsBetween(W.unboundedPreceding, 0))
-    return df.withColumn(
-        "running_value", F.coalesce(base, F.lit(0.0)) + deltas
-    ).drop("_seg")
 
 
 def gauge_carry_forward(
@@ -281,19 +198,19 @@ def gauge_carry_forward(
     bin_width: int = 60,
     key_cols: list[str] | None = None,
     order_col: str = "order_key",
-    fill_gaps: bool = True,
 ) -> DataFrame:
-    """Per-bin gauge value with carry-forward into empty bins
-    (buckets.rs:163-175): bin value = running value at end of bin; bins with
-    no events inherit the previous bin's value.
+    """The statsd gauge fold per bin: Set replaces, signed-delta Sum adds, in
+    stable order (reference test fitness_for_statsd_gauge,
+    src/buckets.rs:240-309); bin value = running value at the end of the
+    bin, and bins with no events inherit the previous bin's value
+    (buckets.rs:163-175) with ``n_points`` = 0.
 
     Plan shape (audited): ONE scan of the raw points, ONE wide window
-    keyed (series, bin) — the time bin doubles as the parallelism chunk —
-    feeding ONE hash aggregate on the same partitioning (no extra
-    exchange); everything after runs on the tiny per-bin table (series ×
-    bins rows): an ordered per-series merge, then sequence-explode gap
-    fill. The previous form folded per-row running values first and
-    re-scanned the source three times."""
+    keyed (series, bin) — the time bin doubles as the parallelism chunk, so
+    a hot series spreads over its bins — feeding ONE hash aggregate on the
+    same partitioning (no extra exchange); everything after runs on the
+    tiny per-bin table (series × bins rows): an ordered per-series merge,
+    then the :func:`_fill_bins` gap fill."""
     keys = key_cols or (["name", "tags_key"] if "tags_key" in gauges.columns else ["name"])
     is_set_c = F.col("kind") == "SET"
     df = with_bin(gauges, bin_width)
@@ -339,40 +256,14 @@ def gauge_carry_forward(
         (F.coalesce(base2, F.lit(0.0)) + rel).alias("gauge_value"),
         "n_points",
     )
-    if not fill_gaps:
-        return per_bin
-
-    # 4. gap fill WITHOUT a self-join: each bin emits itself plus the empty
-    # bins up to (exclusive) the series' next observed bin, carrying its
-    # value — one lead() on the existing per-series window, one explode
-    nxt = F.lead("bin").over(W.partitionBy(*keys).orderBy("bin"))
-    gap_seq = F.when(
-        nxt.isNotNull() & (nxt > F.col("bin") + 1),
-        F.sequence(F.col("bin") + 1, nxt - 1),
-    )
-    return (
-        per_bin.withColumn(
-            "_bins",
-            F.concat(
-                F.array(F.col("bin")),
-                F.coalesce(gap_seq, F.array().cast("array<bigint>")),
-            ),
-        )
-        .select(
-            *keys,
-            "gauge_value",
-            "n_points",
-            F.posexplode("_bins").alias("_i", "bin"),
-        )
-        .select(
-            *keys,
-            "bin",
-            "gauge_value",
-            F.when(F.col("_i") == 0, F.col("n_points"))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("n_points"),
-        )
+    return _fill_bins(per_bin, keys).select(
+        *keys,
+        "bin",
+        "gauge_value",
+        F.when(F.col("_i") == 0, F.col("n_points"))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("n_points"),
     )
 
 
@@ -386,40 +277,15 @@ def zero_pad(
     """Wavefront gap padding: emit 0-points for missing bins inside each
     series' observed span (reference src/sink/wavefront.rs:203-342 pads
     around gaps; we fill the whole gap — a superset with identical
-    at-the-gap behavior).
-
-    Join-free: each bin emits itself plus 0-valued rows for the empty bins
-    up to the series' next observed bin — one lead() window + one explode
-    over the per-bin table (the previous spans+self-join form re-scanned
-    the upstream twice)."""
-    other = [c for c in per_bin.columns if c not in {*key_cols, "bin", value_col}]
-    nxt = F.lead("bin").over(W.partitionBy(*key_cols).orderBy("bin"))
-    gap_seq = F.when(
-        nxt.isNotNull() & (nxt > F.col("bin") + 1),
-        F.sequence(F.col("bin") + 1, nxt - 1),
-    )
-    return (
-        per_bin.withColumn(
-            "_bins",
-            F.concat(
-                F.array(F.col("bin")),
-                F.coalesce(gap_seq, F.array().cast("array<bigint>")),
-            ),
-        )
-        .select(
-            *key_cols,
-            value_col,
-            *other,
-            F.posexplode("_bins").alias("_i", "bin"),
-        )
-        .select(
-            *key_cols,
-            "bin",
-            F.when(F.col("_i") == 0, F.col(value_col))
-            .otherwise(F.lit(0.0))
-            .alias(value_col),
-            *other,
-        )
+    at-the-gap behavior). Returns the keys, ``bin`` and ``value_col``
+    only: any other column describes the observed bin, not the padding."""
+    per_bin = per_bin.select(*key_cols, "bin", value_col)
+    return _fill_bins(per_bin, key_cols).select(
+        *key_cols,
+        "bin",
+        F.when(F.col("_i") == 0, F.col(value_col))
+        .otherwise(F.lit(0.0))
+        .alias(value_col),
     )
 
 
@@ -431,39 +297,27 @@ def wavefront_persist_reinsert(
     re-timestamped — i.e. a persisted series keeps emitting its last value
     in every later window, forever, until overwritten. Batch form: extend
     each persist series with carried values through the GLOBAL max bin
-    (the last flush). Synthesized rows carry ``reinserted=true`` and
-    n_points=0. Joins are span-table sized, never per-point."""
+    (the last flush), by :func:`_fill_bins` over the persisted rows with
+    the max bin from a one-row broadcast. Synthesized rows carry
+    ``reinserted=true``, n_points=0 and the ``kind`` of the row they carry
+    (a series reported under one kind keeps it)."""
     keys = key_cols or (
         ["name", "tags_key"] if "tags_key" in agg.columns else ["name"]
     )
     agg = agg.withColumn("reinserted", F.lit(False))
-    pers = agg.filter(F.col("persist"))
     hi = agg.agg(F.max("bin").alias("_hi"))
-    spans = pers.groupBy(*keys).agg(
-        F.min("bin").alias("_lo"), F.max("bin").alias("_series_hi"),
-        F.first("kind").alias("_kind"),
+    pers = agg.filter(F.col("persist")).select(
+        *keys, "bin", "agg_value", "kind"
     ).crossJoin(F.broadcast(hi))
-    all_bins = spans.select(
-        *keys, "_kind",
-        F.explode(F.sequence(F.col("_lo"), F.col("_hi"))).alias("bin"),
-    )
-    filled = all_bins.join(
-        pers.select(*keys, "bin", "agg_value", "n_points"), [*keys, "bin"], "left"
-    )
-    wfill = W.partitionBy(*keys).orderBy("bin").rowsBetween(
-        W.unboundedPreceding, 0
-    )
     synth = (
-        filled.withColumn(
-            "_carried", F.last("agg_value", ignorenulls=True).over(wfill)
-        )
-        .filter(F.col("agg_value").isNull())  # only the gap/tail bins
+        _fill_bins(pers, keys, stop=F.col("_hi") + 1)
+        .filter(F.col("_i") > 0)  # only the gap/tail bins
         .select(
             *keys,
             "bin",
-            F.col("_carried").alias("agg_value"),
+            "agg_value",
             F.lit(0).cast("long").alias("n_points"),
-            F.col("_kind").alias("kind"),
+            "kind",
             F.lit(True).alias("persist"),
             F.lit(True).alias("reinserted"),
         )

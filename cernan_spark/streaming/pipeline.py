@@ -134,7 +134,9 @@ def _gauge_fold(
 ) -> Iterator[pd.DataFrame]:
     """Per-series gauge fold (Set replaces, delta-Sum adds) carrying the
     running value in GroupState across micro-batches — the streaming twin
-    of operators/aggregate.gauge_running_value."""
+    of the batch fold in operators/aggregate.gauge_carry_forward, whose
+    value in a single bin spanning the whole stream is this running
+    value."""
     if state.exists:
         running, n = state.get
     else:

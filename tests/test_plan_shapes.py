@@ -446,3 +446,34 @@ def test_flagship_runs_no_python_and_no_config_join(spark):
     assert _count(_plan(enrich_tags_fast(tel, default_tag_dicts(spark))), joins) == _count(
         _plan(tel), joins
     )
+
+
+def test_gauge_carry_forward_two_exchanges_no_join(spark):
+    """The gauge fold shuffles twice — on (series, bin) for the fold and
+    its per-bin aggregate, then on the series for the merge over bins and
+    the gap fill — and never joins."""
+    from cernan_spark.operators.aggregate import gauge_carry_forward
+
+    g = spark.createDataFrame(
+        [("lO", 1.0, "SET", 0, 1), ("lO", 2.0, "SUM", 1, 2), ("lO", 0.0, "SET", 130, 3)],
+        "name string, value double, kind string, event_epoch long, order_key long",
+    ).withColumn("ts", F.lit(None).cast("timestamp"))
+    plan = _final_plan(gauge_carry_forward(g, bin_width=60, key_cols=["name"]))
+    assert _count(plan, r"Exchange") == 2, plan
+    assert _count(plan, r"\w+Join\b") == 0, plan
+
+
+def test_wavefront_persist_reinsert_no_shuffled_join(spark):
+    """Re-insertion fills each persisted series from its own rows; the
+    last flush's bin arrives as a one-row broadcast, so nothing is joined
+    through a shuffle."""
+    from cernan_spark.operators.aggregate import wavefront_persist_reinsert
+
+    agg = spark.createDataFrame(
+        [("g", 1, "SET", 7.0, 1, True), ("g", 3, "SET", 9.0, 1, True),
+         ("c", 5, "SUM", 1.0, 1, False)],
+        "name string, bin long, kind string, agg_value double, n_points long, "
+        "persist boolean",
+    )
+    plan = _final_plan(wavefront_persist_reinsert(agg, ["name"]))
+    assert _count(plan, r"SortMergeJoin|ShuffledHashJoin") == 0, plan

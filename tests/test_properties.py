@@ -1,11 +1,12 @@
 """Property-based tests (the reference's test strategy is quickcheck-heavy
 — SURVEY §5): wire codecs must round-trip arbitrary payloads, and the
-chunked gauge fold must equal the whole-series fold on arbitrary programs."""
+gauge fold must equal a plain Python fold on arbitrary programs."""
 
 from __future__ import annotations
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from cernan_spark.functions.nativeproto import (
     decode_payload,
@@ -103,38 +104,42 @@ def test_avro_container_roundtrip_property(records, id_, control, codec):
     assert c["records"] == records
 
 
-def test_gauge_chunked_equals_global_property(spark):
-    """Arbitrary SET/SUM programs: the chunked fold must match the
-    whole-series fold on every prefix (30 seeded random programs, chunk
-    size 7 forcing many boundary crossings)."""
+def test_gauge_carry_forward_matches_python_fold(spark):
+    """Arbitrary SET/SUM programs (30 seeded random series): every observed
+    bin of gauge_carry_forward holds the running value of a plain Python
+    fold after the bin's last point, including delta runs that straddle
+    bins and bins with no SET; empty bins inside a series are filled."""
     import random
 
-    from cernan_spark.operators.aggregate import (
-        gauge_running_value,
-        gauge_running_value_global,
-    )
+    from cernan_spark.operators.aggregate import gauge_carry_forward
 
+    width = 4
     rng = random.Random(2024)
     rows = []
     for s in range(30):
-        n = rng.randint(1, 40)
-        for i in range(n):
-            kind = "SET" if rng.random() < rng.choice([0.0, 0.1, 0.5, 1.0]) else "SUM"
-            rows.append((f"s{s}", kind, float(rng.randint(-50, 50)), i))
+        p_set = rng.choice([0.0, 0.1, 0.5, 1.0])
+        epoch = 0
+        for i in range(rng.randint(1, 40)):
+            epoch += rng.choice([0, 0, 1, 3, 9])  # 9 skips whole bins
+            kind = "SET" if rng.random() < p_set else "SUM"
+            rows.append((f"s{s}", kind, float(rng.randint(-50, 50)), epoch, i))
+
+    want, running = {}, {}
+    for name, kind, value, epoch, _ in rows:  # per series in order_key order
+        running[name] = value if kind == "SET" else running.get(name, 0.0) + value
+        want[(name, epoch // width)] = running[name]
+
     df = spark.createDataFrame(
-        rows, "name string, kind string, value double, order_key long"
-    )
-    fast = {
-        (r["name"], r["order_key"]): r["running_value"]
-        for r in gauge_running_value(df, ["name"], chunk_size=7).collect()
+        rows, "name string, kind string, value double, event_epoch long, order_key long"
+    ).withColumn("ts", F.lit(None).cast("timestamp"))
+    got = {
+        (r["name"], r["bin"]): (r["gauge_value"], r["n_points"])
+        for r in gauge_carry_forward(df, bin_width=width, key_cols=["name"]).collect()
     }
-    slow = {
-        (r["name"], r["order_key"]): r["running_value"]
-        for r in gauge_running_value_global(df, ["name"]).collect()
-    }
-    assert fast.keys() == slow.keys()
-    for k, v in slow.items():
-        assert abs(fast[k] - v) < 1e-9, (k, fast[k], v)
+    assert {k: v for k, (v, n) in got.items() if n > 0} == want
+    for series in {name for name, _ in want}:
+        bins = sorted(b for name, b in got if name == series)
+        assert bins == list(range(bins[0], bins[-1] + 1))
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Routing fan-out, unrouted accounting, tag-overlay precedence, JSON merge
+"""Routing fan-out, unrouted accounting, default-tag overlay, JSON merge
 precedence, programmable-filter registry."""
 
 from __future__ import annotations
@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cernan_spark.functions.jsonlog import json_encode, merge_maps_first_wins
-from cernan_spark.operators.enrich import enrich_tags
+from cernan_spark.operators.enrich import enrich_tags_fast
 from cernan_spark.operators.filters import (
     apply_programmable,
     delay_filter,
@@ -53,19 +53,6 @@ def test_unrouted_dropped_with_count(spark):
     routes = _routes(spark, [("telemetry", "^a", "console")])
     tel = _tel(spark, ["abc", "xyz", "zzz"])
     assert unrouted(tel, routes).count() == 2
-
-
-def test_enrich_event_tags_win(spark):
-    """Overlay precedence: event tags ⊳ defaults (telemetry.rs:956-984)."""
-    df = spark.createDataFrame(
-        [("user", "bash", {"origin": "override", "custom": "1"})],
-        "role string, tool string, tags map<string,string>",
-    )
-    out = enrich_tags(df, default_tag_dicts(spark)).collect()[0]["tags"]
-    assert out["origin"] == "override"     # event value wins over role default
-    assert out["custom"] == "1"            # event-only key kept
-    assert out["tool_class"] == "shell"    # tool default applied
-    assert out["source"] == "cernan_spark" # global default applied
 
 
 def test_json_merge_first_wins(spark):
@@ -152,10 +139,8 @@ def test_delay_filter_strict_bound(spark):
 
 def test_enrich_fast_equals_slow_on_partial_matches(spark):
     """enrich_tags_fast must give partial-match rows (known role, unlisted
-    tool — and vice versa) the matching scope's defaults, identically to
-    enrich_tags' independent overlays (TagIter, metric/mod.rs:43-85)."""
-    from cernan_spark.operators.enrich import enrich_tags_fast
-
+    tool — and vice versa) the matching scope's defaults, as cernan's
+    independent overlays do (TagIter, metric/mod.rs:43-85)."""
     df = spark.createDataFrame(
         [
             ("user", "bash"),        # full match
@@ -166,16 +151,20 @@ def test_enrich_fast_equals_slow_on_partial_matches(spark):
         ],
         "role string, tool string",
     )
-    dicts = default_tag_dicts(spark)
-    slow = {
+    glob = {"source": "cernan_spark", "env": "test"}
+    human = {"origin": "human"}
+    shell = {"tool_class": "shell"}
+    got = {
         (r["role"], r["tool"]): dict(r["tags"])
-        for r in enrich_tags(df, dicts).collect()
+        for r in enrich_tags_fast(df, default_tag_dicts(spark)).collect()
     }
-    fast = {
-        (r["role"], r["tool"]): dict(r["tags"])
-        for r in enrich_tags_fast(df, dicts).collect()
+    assert got == {
+        ("user", "bash"): {**human, **shell, **glob},
+        ("user", "none"): {**human, **glob},
+        ("martian", "bash"): {**shell, **glob},
+        ("martian", "none"): glob,
+        (None, None): glob,
     }
-    assert fast == slow
 
 
 def test_metric_query_hook(spark):

@@ -170,15 +170,15 @@ def test_batch_streaming_equivalence_gate(spark):
 def test_batch_streaming_gauge_equivalence(spark, tmp_path):
     """Stateful-gauge batch≡streaming gate: the applyInPandasWithState
     fold's final running value per series (across THREE pinned-order
-    micro-batches) equals the batch gauge_running_value fold over the same
-    corpus in order_key order — cernan's persist semantics
+    micro-batches) equals the batch gauge_carry_forward fold over the same
+    corpus with one bin spanning it all — cernan's persist semantics
     (buckets.rs:240-309) hold identically on both paths."""
     import glob
     import os
     import uuid
 
     from cernan_spark.functions.statsd import parse_statsd_lines
-    from cernan_spark.operators.aggregate import gauge_running_value
+    from cernan_spark.operators.aggregate import gauge_carry_forward
 
     rows = []
     for i in range(300):
@@ -234,15 +234,9 @@ def test_batch_streaming_gauge_equivalence(spark, tmp_path):
     }
 
     batch = parse_statsd_lines(df, line_col="text").filter(F.col("persist"))
-    rv = gauge_running_value(batch)
+    one_bin = gauge_carry_forward(batch, bin_width=1 << 40, key_cols=["name"])
     batch_final = {
-        r["name"]: (r["running_value"], r["n_events"])
-        for r in rv.groupBy("name")
-        .agg(
-            F.max_by("running_value", "order_key").alias("running_value"),
-            F.count("*").alias("n_events"),
-        )
-        .collect()
+        r["name"]: (r["gauge_value"], r["n_points"]) for r in one_bin.collect()
     }
     assert len(stream_final) == 10
     assert stream_final == batch_final
