@@ -135,6 +135,39 @@ def test_delta_gauge_before_any_set(spark):
     ]
 
 
+def test_gauge_chunked_fold_equals_global(spark):
+    """The fold is chunked by bin (16 points per bin, 13 bins per series):
+    each bin's closing value must equal a whole-series Python fold, including
+    delta runs that straddle bin boundaries and bins with no SET at all."""
+    import random
+
+    rng = random.Random(7)
+    rows = []
+    for series in ("a", "b"):
+        for i in range(200):
+            if rng.random() < 0.15:
+                rows.append((series, "SET", float(rng.randint(0, 100)), i))
+            else:
+                rows.append((series, "SUM", float(rng.choice([-2, -1, 1, 3])), i))
+
+    width = 16
+    want, running = {}, {}
+    for name, kind, value, i in rows:  # per series in order_key order
+        running[name] = value if kind == "SET" else running.get(name, 0.0) + value
+        want[(name, i // width)] = running[name]
+
+    df = spark.createDataFrame(
+        rows, "name string, kind string, value double, order_key long"
+    ).withColumn("ts", F.timestamp_seconds("order_key"))
+    got = {
+        (r["name"], r["bin"]): r["gauge_value"]
+        for r in gauge_carry_forward(df, bin_width=width, key_cols=["name"]).collect()
+    }
+    assert got.keys() == want.keys()
+    for k, v in want.items():
+        assert abs(got[k] - v) < 1e-9, (k, got[k], v)
+
+
 def test_zero_pad_gaps(spark):
     per_bin = spark.createDataFrame(
         [("m", 10, 1.0), ("m", 13, 2.0)], "name string, bin long, agg_value double"

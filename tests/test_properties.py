@@ -104,11 +104,12 @@ def test_avro_container_roundtrip_property(records, id_, control, codec):
     assert c["records"] == records
 
 
-def test_gauge_carry_forward_matches_python_fold(spark):
-    """Arbitrary SET/SUM programs (30 seeded random series): every observed
-    bin of gauge_carry_forward holds the running value of a plain Python
-    fold after the bin's last point, including delta runs that straddle
-    bins and bins with no SET; empty bins inside a series are filled."""
+def test_gauge_chunked_equals_global_property(spark):
+    """Arbitrary SET/SUM programs (30 seeded random series): the fold is
+    chunked by bin, and every observed bin of gauge_carry_forward holds the
+    running value of a whole-series Python fold after the bin's last point,
+    including delta runs that straddle bins and bins with no SET; empty
+    bins inside a series are filled."""
     import random
 
     from cernan_spark.operators.aggregate import gauge_carry_forward
