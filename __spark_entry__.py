@@ -81,12 +81,12 @@ def _utc(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def _parsed(spark: SparkSession, sf_dir: str, masks=None) -> DataFrame:
+def _parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of the oracle ``parsed`` CTE: parse statsd lines out of
     the events-derived transcripts."""
     _utc(spark)
     t = transcripts_from_events(spark, sf_dir)
-    return parse_statsd_lines(t, line_col="text", masks=masks).withColumn(
+    return parse_statsd_lines(t, line_col="text").withColumn(
         "epoch", F.unix_timestamp("ts")
     )
 

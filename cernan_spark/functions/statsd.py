@@ -8,8 +8,9 @@ Grammar (reference /root/reference/src/protocols/statsd.rs:22-163):
 * type ``g``  → persist true; signed value (leading +/-) → kind Sum
   (delta gauge), else kind Set
 * type ``ms``/``h`` → kind Summarize, persist false — unless the name
-  matches a histogram mask rule, then kind Histogram with the rule bounds
-  (statsd.rs:105-115,135-145)
+  matches a histogram mask rule, then kind Histogram
+  (statsd.rs:105-115,135-145); the aggregate buckets it by the rule's
+  bounds (:func:`mask_bounds_expr`)
 * any type with a sample rate scales ``value * (1/rate)``
   (statsd.rs:66-116)
 * name may contain ``=``, ``/``, ``-``; it is everything before the first
@@ -153,11 +154,12 @@ def parse_statsd_lines(
 ) -> DataFrame:
     """Parse a DataFrame of statsd lines into typed telemetry rows.
 
-    Adds (name, value, kind, persist, is_valid[, bounds]). If ``masks`` is
-    given (mask regex → bounds, priority), Summarize rows whose name matches
-    a mask are upgraded to Histogram with the first matching rule's bounds —
-    a broadcast nested-loop join against a tiny rules table, mirroring the
-    reference's linear mask scan (statsd.rs:105-115).
+    Adds (name, value, kind, persist, is_valid). If ``masks`` is given
+    (mask regex → bounds, priority), Summarize rows whose name matches a
+    mask are upgraded to Histogram — a CASE chain over the tiny rules
+    table, mirroring the reference's linear mask scan
+    (statsd.rs:105-115). The rule's bounds are not carried per row: the
+    aggregate decides them once (``bounds_expr=mask_bounds_expr(masks)``).
 
     The three raw slices materialize ONCE per row behind a single-element
     ``explode`` (a Generate node): CollapseProject cannot inline the
@@ -191,13 +193,10 @@ def parse_statsd_lines(
         out = out.filter(F.col("is_valid"))
 
     if masks is not None:
-        bounds_expr = F.when(
-            F.col("kind") == KIND_SUMMARIZE, mask_bounds_expr(masks)
-        )
-        out = out.withColumn("bounds", bounds_expr).withColumn(
+        matched = mask_bounds_expr(masks).isNotNull()
+        masked = (F.col("kind") == KIND_SUMMARIZE) & matched
+        out = out.withColumn(
             "kind",
-            F.when(F.col("bounds").isNotNull(), F.lit(KIND_HISTOGRAM)).otherwise(
-                F.col("kind")
-            ),
+            F.when(masked, F.lit(KIND_HISTOGRAM)).otherwise(F.col("kind")),
         )
     return out

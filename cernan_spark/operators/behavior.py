@@ -174,9 +174,9 @@ def attribute_conversions(
     recent ``touch_type`` event STRICTLY BEFORE it, if that touch is
     within ``window_s`` seconds — the marketing-pipeline join that is a
     single ordered scan, never a self-join (a conversions×touches
-    range join would multiply rows before filtering; the carry-forward
-    is the same ``last(ignorenulls)`` discipline as
-    temporal.asof_join_union). ONE window exchange on the user key.
+    range join would multiply rows before filtering; the touch is
+    carried forward with ``last(ignorenulls)``). ONE window exchange on
+    the user key.
 
     Output per conversion: ``user, conv_order, conv_ts_s, touch_order
     (nullable), latency_s (nullable), attributed``.

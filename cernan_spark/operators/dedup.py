@@ -121,7 +121,7 @@ def minhash_signatures(
     """(id, sig) — the persistable MinHash index state. Signature
     computation (shingle hashing) is the expensive stage; persisting this
     frame lets a scheduled ingest hash ONLY new docs and band new-vs-all
-    (:func:`minhash_resume_candidates`), the same accumulator-handoff
+    (:func:`minhash_resume_delta`), the same accumulator-handoff
     shape as the prometheus resume (operators/aggregate.py)."""
     # stage 1: hash each shingle once (array<long>). Shingle hashes are
     # combined arithmetically from per-token hashes — no n-gram strings are
@@ -289,32 +289,20 @@ def minhash_lsh_candidates(
     return _score_pairs(_bucket_pairs(banded, max_bucket), num_hashes)
 
 
-def _bucket_pairs(
-    banded: DataFrame,
-    max_bucket: int,
-    new_only: bool = False,
-    keys: tuple[str, str] = ("band", "band_hash"),
-    payload: str = "sig",
-) -> DataFrame:
-    """Candidate pairs (id_a < id_b, with their ``payload`` values) from a
-    banded frame keyed on ``keys``: collect bucket members, drop oversize
-    buckets, explode in-bucket pairs, dedupe across bands.
-    ``new_only=True`` expects an ``is_new`` flag column and keeps only
-    pairs touching ≥1 new member (the resumed run must not re-emit pairs
-    the prior run already found)."""
-    mfields = [F.col("id"), F.col(payload)] + (
-        [F.col("is_new")] if new_only else []
-    )
+def _bucket_pairs(banded: DataFrame, max_bucket: int) -> DataFrame:
+    """Candidate pairs (id_a < id_b, with their signatures) from a banded
+    frame: collect bucket members, drop oversize buckets, explode
+    in-bucket pairs, dedupe across bands."""
     buckets = (
-        banded.groupBy(*keys)
-        .agg(F.collect_list(F.struct(*mfields)).alias("members"))
+        banded.groupBy("band", "band_hash")
+        .agg(
+            F.collect_list(F.struct(F.col("id"), F.col("sig"))).alias(
+                "members"
+            )
+        )
         .filter((F.size("members") > 1) & (F.size("members") <= max_bucket))
     )
-    if new_only:
-        buckets = buckets.filter(
-            F.exists(F.col("members"), lambda m: m["is_new"])
-        )
-    return _pairs_from_members(buckets, payload, require_new=new_only)
+    return _pairs_from_members(buckets, "sig")
 
 
 def _pairs_from_members(
@@ -370,8 +358,8 @@ def _resume_delta(
     :func:`minhash_resume_delta` and :func:`simhash_resume_delta`.
 
     * ``op='add'`` — pairs touching ≥1 new member in a bucket whose UNION
-      (persisted+new) size is within ``max_bucket`` — same pairs the
-      plain resume emits.
+      (persisted+new) size is within ``max_bucket``: the resumed run does
+      not re-emit pairs the prior run already found.
     * ``op='retract'`` — old-old pairs from buckets that CROSSED the cap
       this generation (old count ≤ max_bucket < union count, so the prior
       run emitted them but a one-pass run over the union corpus would
@@ -457,7 +445,7 @@ def _score_pairs(
     )
 
 
-def minhash_resume_candidates(
+def minhash_resume_delta(
     new_docs: DataFrame,
     prior_sigs: DataFrame,
     text_col: str = "text",
@@ -471,47 +459,9 @@ def minhash_resume_candidates(
     """Incremental near-dup detection for scheduled ingest: given the
     persisted signature table of everything already indexed
     (:func:`minhash_signatures` output) and a new shard, hash ONLY the new
-    docs, re-band stored signatures (cheap — no text), and emit candidate
-    pairs touching ≥1 new doc. The prior run's pairs plus this run's
-    pairs equal the one-pass result over the union corpus — the dedup
-    analog of the prometheus accumulator resume, oracle-checked by the
-    ``minhash_resume`` entry query against the one-pass SQL replay.
-
-    Caveat: the ``max_bucket`` cap is evaluated per run. A bucket that
-    crosses the cap only once the new shard lands drops its NEW pairs
-    here, while a one-pass run would also retroactively drop the
-    old-old pairs; :func:`bucket_drop_stats` over the combined banding
-    surfaces exactly these buckets, and :func:`minhash_resume_delta`
-    additionally emits them as retractions, restoring full one-pass
-    equality.
-    """
-    new_sigs = minhash_signatures(
-        new_docs, text_col, id_col, num_hashes, shingle_n, portable
-    )
-    combined = new_sigs.withColumn("is_new", F.lit(True)).unionByName(
-        prior_sigs.select("id", "sig").withColumn("is_new", F.lit(False))
-    )
-    banded = band_signatures(combined, num_hashes, bands)
-    return _score_pairs(
-        _bucket_pairs(banded, max_bucket, new_only=True), num_hashes
-    )
-
-
-def minhash_resume_delta(
-    new_docs: DataFrame,
-    prior_sigs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    max_bucket: int = 50,
-    portable: bool = False,
-) -> DataFrame:
-    """Cap-deterministic incremental MinHash: like
-    :func:`minhash_resume_candidates` but the output carries an ``op``
-    column — ``'add'`` pairs (new-touching, union-capped) plus
-    ``'retract'`` pairs the prior run emitted that a one-pass run over
+    docs, re-band stored signatures (cheap — no text), and emit a delta
+    with an ``op`` column — ``'add'`` pairs (new-touching, union-capped)
+    plus ``'retract'`` pairs the prior run emitted that a one-pass run over
     the union corpus would not (their bucket crossed ``max_bucket`` this
     generation and they survive in no other band). Applying the delta —
     ``(prior ∖ retract) ∪ add`` — makes the final pair set a pure
@@ -618,18 +568,6 @@ def simhash_naive(text: Column, bits: int = 64) -> Column:
             F.lit(0).cast("long")
         )
     return out
-
-
-def simhash_dedup(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """SimHash fingerprints + exact-fingerprint duplicate groups."""
-    s = docs.select(F.col(id_col), simhash(F.col(text_col)).alias("simhash"))
-    return s.groupBy("simhash").agg(
-        F.min(id_col).alias("canonical_id"),
-        F.count("*").alias("n_docs"),
-        F.sort_array(F.collect_list(id_col)).alias("members"),
-    )
 
 
 def seed_text_near_dups(
@@ -901,7 +839,7 @@ def paragraph_dedup(
     ).withColumnRenamed("id", id_col)
 
 
-def simhash_resume_pairs(
+def simhash_resume_delta(
     new_docs: DataFrame,
     prior_fps: DataFrame,
     text_col: str = "text",
@@ -914,46 +852,14 @@ def simhash_resume_pairs(
     """Incremental SimHash radius search for scheduled ingest: given the
     persisted fingerprint table (:func:`simhash_fingerprints` output) and
     a new shard, fingerprint ONLY the new docs, chunk-band stored
-    fingerprints (cheap — no text pass), and emit hamming-≤k pairs
-    touching ≥1 new doc. Prior-run pairs plus this run's pairs equal the
-    one-pass result over the union corpus — same contract and same
-    per-run bucket-cap caveat as :func:`minhash_resume_candidates`;
-    :func:`simhash_resume_delta` adds the retractions that make the
-    composition cap-deterministic at every SF."""
-    assert k < n_chunks, "pigeonhole guarantee needs k < n_chunks"
-    new_fp = simhash_fingerprints(new_docs, text_col, id_col, portable)
-    combined = new_fp.withColumn("is_new", F.lit(True)).unionByName(
-        prior_fps.select("id", "fp").withColumn("is_new", F.lit(False))
-    )
-    banded = band_fingerprints(combined, n_chunks, portable)
-    pairs = _bucket_pairs(
-        banded, max_bucket, new_only=True, keys=("chunk", "cval"),
-        payload="fp",
-    )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return pairs.filter(hamming <= k).select(
-        "id_a", "id_b", hamming.cast("int").alias("hamming")
-    )
-
-
-def simhash_resume_delta(
-    new_docs: DataFrame,
-    prior_fps: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    n_chunks: int = 4,
-    max_bucket: int = 100,
-    portable: bool = False,
-) -> DataFrame:
-    """Cap-deterministic incremental SimHash: :func:`simhash_resume_pairs`
-    plus an ``op`` column — ``'add'`` pairs and ``'retract'`` pairs whose
-    chunk bucket crossed ``max_bucket`` this generation (the prior run
-    emitted them; a one-pass union run would not). ``(prior ∖ retract) ∪
-    add`` equals the one-pass hamming-≤k pair set at every SF — this
-    closes the exact divergence sf0.1's degenerate 8-bit chunk bucket
-    exposed (509/550 docs sharing one cval crossing the cap between
-    runs). Both sides are hamming-filtered: run 1 only ever emitted ≤k
+    fingerprints (cheap — no text pass), and emit hamming-≤k pairs with an
+    ``op`` column — ``'add'`` pairs touching ≥1 new doc and ``'retract'``
+    pairs whose chunk bucket crossed ``max_bucket`` this generation (the
+    prior run emitted them; a one-pass union run would not).
+    ``(prior ∖ retract) ∪ add`` equals the one-pass hamming-≤k pair set
+    at every SF — this closes the exact divergence sf0.1's degenerate
+    8-bit chunk bucket exposed (509/550 docs sharing one cval crossing
+    the cap between runs). Both sides are hamming-filtered: run 1 only ever emitted ≤k
     pairs, so retracting >k pairs would be a no-op."""
     assert k < n_chunks, "pigeonhole guarantee needs k < n_chunks"
     new_fp = simhash_fingerprints(new_docs, text_col, id_col, portable)

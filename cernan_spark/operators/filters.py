@@ -206,10 +206,6 @@ PROGRAMMABLE_REGISTRY = {
 }
 
 
-def apply_programmable(df: DataFrame, name: str, /, **kwargs) -> DataFrame:
-    return PROGRAMMABLE_REGISTRY[name](df, **kwargs)
-
-
 def apply_programmable_safe(
     df: DataFrame, filter_path: str, func: str, /, **kwargs
 ) -> tuple[DataFrame, DataFrame]:

@@ -24,17 +24,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),       # image | audio | video
-        T.StructField("content", T.BinaryType()),    # opaque encoded bytes
-        T.StructField("mime", T.StringType()),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_id long, kind string, n_bytes int, sha256 string, "

@@ -1,4 +1,4 @@
-"""Hot-key skew handling: salted repartition + two-phase aggregation.
+"""Hot-key skew handling: deterministic salts + two-phase window operators.
 
 The transcripts table has conv_id hot keys (one conversation can hold ~20%
 of all turns). A plain groupBy/window on conv_id puts that key in one task.
@@ -34,24 +34,6 @@ def with_salt(
     else:
         src = F.monotonically_increasing_id()
     return df.withColumn(salt_col, F.pmod(F.xxhash64(src), F.lit(n_salts)).cast("int"))
-
-
-def salted_repartition(
-    df: DataFrame, key: str, n_partitions: int, n_salts: int = 16
-) -> DataFrame:
-    """repartition on (key, salt): a hot key spreads over n_salts tasks."""
-    return with_salt(df, n_salts).repartition(n_partitions, F.col(key), F.col("_salt"))
-
-
-def salted_count(df: DataFrame, key_cols: list[str], n_salts: int = 32) -> DataFrame:
-    """Two-phase count per key: (key, salt) partial → key total. The first
-    shuffle spreads the hot key across n_salts reducers; the second is tiny."""
-    partial = (
-        with_salt(df, n_salts)
-        .groupBy(*key_cols, "_salt")
-        .agg(F.count("*").alias("_c"))
-    )
-    return partial.groupBy(*key_cols).agg(F.sum("_c").alias("n_rows"))
 
 
 def salted_topk(
@@ -295,7 +277,7 @@ def gini_concentration(
     """Traffic-concentration profile over a key: the Gini coefficient of
     the per-key row-count distribution plus the head shares — the
     numeric answer to "how skewed is this key?" that decides between a
-    plain shuffle, :func:`salted_repartition`, and AQE skew hints
+    plain shuffle, a salted two-phase operator, and AQE skew hints
     (compose with :func:`skew_report`, which profiles the top keys;
     this scores the whole distribution in one number).
 

@@ -8,20 +8,11 @@ Two operator families the reference implies but never names:
   the programmable-filter topology is rebuilt per reload). In a batch
   rebuild over history that is exactly an as-of join: each turn joins the
   latest config version with ``valid_from <= ts``. Spark has no ASOF
-  relation, so two strategies are provided and proven equal:
-
-  - :func:`asof_join_broadcast` — the dimension side is tiny (config
-    versions), so pack each key's versions into one sorted array, broadcast
-    that, equi-join on the key alone, and pick the as-of version with a
-    sorted-array ``filter`` + ``element_at(-1)``. No shuffle and no row
-    multiplication of the fact side at all. This is the 100 TB plan when
-    the right side fits in a broadcast (config tables always do).
-  - :func:`asof_join_union` — the general two-big-sides form: union-tag
-    both sides, ONE shuffle on the join key, and carry the latest right
-    row forward with ``last(..., ignorenulls=True)`` over
-    ``(key, ts, side)``. Hot keys chunk the same way the gauge fold does
-    (operators/aggregate.py segmented scan); the config use case never
-    needs it, so chunking is not wired here.
+  relation; :func:`asof_join_broadcast` packs each key's versions (the
+  dimension side is tiny: config versions) into one sorted array,
+  broadcasts that, equi-joins on the key alone, and picks the as-of
+  version with a sorted-array ``filter`` + ``element_at(-1)``. No shuffle
+  and no row multiplication of the fact side at all.
 
 * **Counter increase / reset detection** — prometheus counters are
   cumulative and wrap on process restart; ``increase()`` semantics say a
@@ -88,60 +79,6 @@ def asof_join_broadcast(
     )
     return joined.select(
         *lcols, *[pick[c].alias(c) for c in payload_cols]
-    )
-
-
-def asof_join_union(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: list[str],
-    left_ts: str,
-    right_ts: str,
-    payload_cols: list[str],
-) -> DataFrame:
-    """General as-of join: both sides large, ONE shuffle on the key.
-
-    Union-tag the two sides, sort within each key by
-    ``(ts, side)`` — right rows sort BEFORE left rows at the same
-    timestamp so ``valid_from == ts`` is inclusive, matching
-    :func:`asof_join_broadcast` and DuckDB ``ASOF JOIN`` (``>=``) — and
-    carry the latest right payload forward with ``last(ignorenulls)``.
-    Rows-preserving for the left side; right rows are dropped after the
-    carry. Equality with the broadcast form is pinned in
-    tests/test_temporal.py.
-    """
-    lcols = left.columns
-    # Duplicate right timestamps per key: keep the max payload, mirroring
-    # the broadcast form's struct tie-break.
-    r_dedup = right.groupBy(*key_cols, F.col(right_ts).alias("__ts")).agg(
-        F.max(F.struct(*payload_cols)).alias("__payload")
-    )
-    l_tag = left.select(
-        *[F.col(k) for k in key_cols],
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias("__side"),
-        F.struct(*[F.col(c) for c in lcols]).alias("__row"),
-        F.lit(None).cast(r_dedup.schema["__payload"].dataType).alias("__payload"),
-    )
-    r_tag = r_dedup.select(
-        *[F.col(k) for k in key_cols],
-        "__ts",
-        F.lit(0).alias("__side"),
-        F.lit(None).cast(l_tag.schema["__row"].dataType).alias("__row"),
-        "__payload",
-    )
-    w = (
-        Window.partitionBy(*key_cols)
-        .orderBy("__ts", "__side")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = l_tag.unionByName(r_tag).withColumn(
-        "__state", F.last("__payload", ignorenulls=True).over(w)
-    )
-    out = carried.where(F.col("__side") == 1)
-    return out.select(
-        *[F.col(f"__row.{c}").alias(c) for c in lcols],
-        *[F.col(f"__state.{c}").alias(c) for c in payload_cols],
     )
 
 

@@ -60,7 +60,7 @@ def parse_stage(
     """Explode text into lines, classify, parse each wire format.
 
     Returns {'telemetry', 'logs', 'bad'} DataFrames. Telemetry rows carry
-    (name, value, kind, persist[, bounds], event_epoch) + provenance
+    (name, value, kind, persist, event_epoch) + provenance
     (conv_id, turn_idx, order_key, role, tool, ts).
     """
     if "order_key" not in transcripts.columns:
@@ -90,23 +90,14 @@ def parse_stage(
     )
     graphite = parse_graphite_lines(
         lines.filter(F.col("line_class") == "graphite").drop(
-            "name", "value", "kind", "persist", "is_valid", "bounds"
+            "name", "value", "kind", "persist", "is_valid"
         )
     )
     common = [
         "conv_id", "turn_idx", "order_key", "role", "tool", "ts",
         "name", "value", "kind", "persist", "event_epoch",
     ]
-    telemetry = (
-        statsd.withColumn("bounds_", F.col("bounds") if "bounds" in statsd.columns
-                          else F.lit(None).cast("array<double>"))
-        .select(*common, F.col("bounds_").alias("bounds"))
-        .unionByName(
-            graphite.select(
-                *common, F.lit(None).cast("array<double>").alias("bounds")
-            )
-        )
-    )
+    telemetry = statsd.select(*common).unionByName(graphite.select(*common))
     logs = parse_json_logs(
         lines.filter(F.col("line_class").isin("json", "log"))
     )

@@ -1,4 +1,4 @@
-"""Input layer: table readers + deterministic transcript derivation.
+"""Input layer: scan helpers + deterministic transcript derivation.
 
 Cernan's sources (statsd UDP, graphite TCP, native protobuf, avro, file
 tail — reference src/source/) become DataFrames here. The driver-mandated
@@ -6,7 +6,6 @@ input is a transcripts table (conv_id, turn_idx, role, text, tool, ts);
 wire payloads live in `text`.
 """
 
-from cernan_spark.sources.tables import load_table, load_tables
 from cernan_spark.sources.transcripts import (
     synthetic_transcripts,
     transcripts_from_events,
@@ -18,8 +17,6 @@ from cernan_spark.sources.dimensions import (
 )
 
 __all__ = [
-    "load_table",
-    "load_tables",
     "transcripts_from_events",
     "synthetic_transcripts",
     "default_routes",

@@ -1,30 +1,13 @@
-"""Parquet table readers for the driver test data.
+"""Scan parallelism for the parquet tables the driver reads.
 
-At 100 TB the same call reads an Iceberg/parquet warehouse; predicate
+At 100 TB the same scans read an Iceberg/parquet warehouse; predicate
 pushdown and column pruning happen in the scan because every downstream
 operator is expressed declaratively.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from pyspark.sql import DataFrame
 
 
 def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
@@ -80,14 +63,3 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
         if groups < par:
             return df.repartition(par, *keys)
     return df
-
-
-def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
-    sf_dir = sf_dir or DEFAULT_SF_DIR
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str | None = None, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, n, sf_dir) for n in names}

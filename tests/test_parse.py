@@ -11,8 +11,9 @@ from pyspark.sql import functions as F
 
 from cernan_spark.functions.classify import line_class
 from cernan_spark.functions.graphite import parse_graphite_lines
-from cernan_spark.functions.statsd import parse_statsd_lines
+from cernan_spark.functions.statsd import mask_bounds_expr, parse_statsd_lines
 from cernan_spark.model import classify_py, parse_statsd_py
+from cernan_spark.operators.aggregate import bucket_aggregate_onepass
 
 # (line, name, value, kind, persist) — reference statsd.rs:358-420,577-623
 STATSD_GOLDEN = [
@@ -56,13 +57,20 @@ def test_statsd_histogram_mask(spark):
         [("^hist\\.", [1.0, 2.0], 1)], "mask string, bounds array<double>, priority int"
     )
     df = spark.createDataFrame(
-        [("hist.x:3|ms",), ("plain:3|ms",), ("hist.y:1|c",)], "line string"
-    )
-    rows = {r["name"]: r for r in parse_statsd_lines(df, masks=masks).collect()}
+        [("hist.x:3|ms", 1), ("plain:3|ms", 2), ("hist.y:1|c", 3)],
+        "line string, order_key long",
+    ).withColumn("ts", F.lit("2024-01-01 00:00:00").cast("timestamp"))
+    parsed = parse_statsd_lines(df, masks=masks)
+    rows = {r["name"]: r for r in parsed.collect()}
     assert rows["hist.x"]["kind"] == "HISTOGRAM"
-    assert rows["hist.x"]["bounds"] == [1.0, 2.0]
     assert rows["plain"]["kind"] == "SUMMARIZE"
     assert rows["hist.y"]["kind"] == "SUM"  # masks only apply to ms/h
+    # the aggregate decides the bounds: the rule's, then the +inf bucket
+    agg = bucket_aggregate_onepass(parsed, bounds_expr=mask_bounds_expr(masks))
+    hist = agg.filter(F.col("name") == "hist.x").collect()[0]["hist"]
+    assert [(e["bound"], e["cnt"]) for e in hist] == [
+        (1.0, 0), (2.0, 0), (float("inf"), 1)
+    ]
 
 
 GRAPHITE_GOLDEN = [

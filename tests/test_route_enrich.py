@@ -3,19 +3,24 @@ precedence, programmable-filter registry."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cernan_spark.functions.jsonlog import json_encode, merge_maps_first_wins
 from cernan_spark.operators.enrich import enrich_tags_fast
 from cernan_spark.operators.filters import (
-    apply_programmable,
+    PROGRAMMABLE_REGISTRY,
     delay_filter,
     xf_add_tag,
     xf_name_rewrite,
     xf_remove_tag,
 )
 from cernan_spark.operators.route import route, routed_counts, unrouted
-from cernan_spark.sources.dimensions import default_tag_dicts
+from cernan_spark.sources.dimensions import (
+    TAG_DICT_SCHEMA,
+    default_tag_dicts,
+    local_table,
+)
 
 
 def _tel(spark, names):
@@ -90,8 +95,9 @@ def test_programmable_registry(spark):
     assert r["tags"]["env"] == "prod" and r["tags"]["k"] == "v"
     r = xf_remove_tag(df, "k").collect()[0]
     assert "k" not in r["tags"]
-    assert apply_programmable(df, "identity").collect()[0]["name"] == "collectd.host.cpu"
-    assert apply_programmable(df, "drop_all").count() == 0
+    reg = PROGRAMMABLE_REGISTRY
+    assert reg["identity"](df).collect()[0]["name"] == "collectd.host.cpu"
+    assert reg["drop_all"](df).count() == 0
 
 
 def test_programmable_round3_scripts(spark):
@@ -108,22 +114,23 @@ def test_programmable_round3_scripts(spark):
         ],
         "name string, record_kind string, line string",
     )
-    scrubbed = {r["name"] for r in apply_programmable(df, "collectd_scrub").collect()}
+    reg = PROGRAMMABLE_REGISTRY
+    scrubbed = {r["name"] for r in reg["collectd_scrub"](df).collect()}
     assert "collectd.cpu" in scrubbed            # dot separator, '-' in host
     assert "collectd.mem.free" in scrubbed       # '@' separator, '_' in host
     assert "other.metric" in scrubbed            # non-collectd untouched
     assert "log-a" in scrubbed
 
-    sv = apply_programmable(df, "set_value", value="foo").collect()
+    sv = reg["set_value"](df, value="foo").collect()
     assert all(r["line"] == "foo" for r in sv)
 
-    cm = apply_programmable(df, "clear_metrics").collect()
+    cm = reg["clear_metrics"](df).collect()
     assert [r["record_kind"] for r in cm] == ["log"]
-    cl = apply_programmable(df, "clear_logs").collect()
+    cl = reg["clear_logs"](df).collect()
     assert all(r["record_kind"] == "telemetry" for r in cl) and len(cl) == 3
     # homogeneous frames (no class column) empty entirely
     tel_only = df.drop("record_kind")
-    assert apply_programmable(tel_only, "clear_metrics").count() == 0
+    assert reg["clear_metrics"](tel_only).count() == 0
 
 
 def test_delay_filter_strict_bound(spark):
@@ -167,6 +174,46 @@ def test_enrich_fast_equals_slow_on_partial_matches(spark):
     }
 
 
+def test_enrich_tags_list_entries_in_precedence_order(spark):
+    """A row's ``tags`` lists role, then tool, then global defaults, each
+    in dictionary order; a row no dictionary covers gets an empty map."""
+    df = spark.createDataFrame(
+        [("user", "bash"), ("martian", "none")], "role string, tool string"
+    )
+    # map_entries keeps Spark's entry order (a collected dict does not)
+    out = enrich_tags_fast(df, default_tag_dicts(spark)).select(
+        "role", F.map_entries("tags").alias("e")
+    )
+    got = {r["role"]: [tuple(kv) for kv in r["e"]] for r in out.collect()}
+    assert got["user"] == [
+        ("origin", "human"), ("tool_class", "shell"),
+        ("source", "cernan_spark"), ("env", "test"),
+    ]
+    role_only = local_table(
+        spark, [("role", "user", "origin", "human")], TAG_DICT_SCHEMA
+    )
+    got = {
+        r["role"]: (r["tags"], r["tags_key"])
+        for r in enrich_tags_fast(df, role_only).collect()
+    }
+    assert got == {"user": ({"origin": "human"}, "origin=human"),
+                   "martian": ({}, "")}
+
+
+@pytest.mark.parametrize(
+    "tag",
+    [("k", "a,b"), ("k", "a=b"), ("k,j", "v"), ("k=j", "v")],
+    ids=["comma_value", "eq_value", "comma_key", "eq_key"],
+)
+def test_enrich_rejects_separator_in_tags(spark, tag):
+    """',' and '=' delimit the 'k=v,…' tags key, so a tag carrying one
+    would let two tag sets share an aggregate group."""
+    dicts = local_table(spark, [("global", "*", *tag)], TAG_DICT_SCHEMA)
+    df = spark.createDataFrame([("user", "bash")], "role string, tool string")
+    with pytest.raises(ValueError, match="contains ',' or '='"):
+        enrich_tags_fast(df, dicts)
+
+
 def test_metric_query_hook(spark):
     """metric_query(q) exposes the window's quantile to the filter
     (programmable_filter.rs PAYLOAD_LIB 'metric_query')."""
@@ -174,7 +221,7 @@ def test_metric_query_hook(spark):
         [("m", 0, float(v)) for v in range(1, 11)] + [("m", 1, 100.0)],
         "name string, bin long, value double",
     )
-    out = apply_programmable(df, "metric_query", prob=0.5)
+    out = PROGRAMMABLE_REGISTRY["metric_query"](df, prob=0.5)
     got = {(r["bin"], r["value"]): r["query_value"] for r in out.collect()}
     assert got[(0, 1.0)] == 5.5       # median of 1..10
     assert got[(1, 100.0)] == 100.0   # singleton window

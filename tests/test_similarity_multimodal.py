@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from cernan_spark.operators.multimodal import (
-    MEDIA_SCHEMA,
     extract_features,
     frame_sample_plan,
     synthetic_media,
@@ -173,7 +172,7 @@ def test_multimodal_strict_mode(spark):
     garbage = spark.createDataFrame(
         [(99, "video", bytearray(b"\x00opaque compressed stream"),
           "video/webm", {})],
-        MEDIA_SCHEMA,
+        media.schema,
     )
     with pytest.raises(Exception, match="NotImplementedError|decode"):
         extract_features(garbage, strict=True).collect()

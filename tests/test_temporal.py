@@ -2,7 +2,7 @@
 
 Strategy mirrors the reference's quickcheck model tests: seeded-random
 inputs, two independent implementations (the broadcast sorted-array plan
-vs the union-tag window plan; the column-expression counter vs a plain
+vs a Python as-of lookup; the column-expression counter vs a plain
 Python fold) asserted equal row-for-row.
 """
 
@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from cernan_spark.operators.temporal import (
     asof_join_broadcast,
-    asof_join_union,
     counter_increase,
 )
 from tests.conftest import rows_to_tuples
@@ -39,31 +38,27 @@ def _asof_fixture(spark, seed: int):
     return ldf, rdf
 
 
-def test_asof_broadcast_equals_union(spark):
-    for seed in (7, 41, 1999):
-        ldf, rdf = _asof_fixture(spark, seed)
-        a = asof_join_broadcast(ldf, rdf, ["key"], "ts", "valid_from", ["sink"])
-        b = asof_join_union(ldf, rdf, ["key"], "ts", "valid_from", ["sink"])
-        cols = ["key", "ts", "row_id", "sink"]
-        assert rows_to_tuples(a, cols) == rows_to_tuples(b, cols)
-
-
 def test_asof_matches_python_model(spark):
-    ldf, rdf = _asof_fixture(spark, 23)
-    out = rows_to_tuples(
-        asof_join_broadcast(ldf, rdf, ["key"], "ts", "valid_from", ["sink"]),
-        ["key", "ts", "row_id", "sink"],
-    )
-    versions: dict[str, list[tuple[int, str]]] = {}
-    for r in rdf.collect():
-        versions.setdefault(r.key, []).append((r.valid_from, r.sink))
-    model = []
-    for r in ldf.collect():
-        elig = sorted(
-            v for v in versions.get(r.key, []) if v[0] <= r.ts
+    for seed in (7, 41, 1999, 23):
+        ldf, rdf = _asof_fixture(spark, seed)
+        out = rows_to_tuples(
+            asof_join_broadcast(
+                ldf, rdf, ["key"], "ts", "valid_from", ["sink"]
+            ),
+            ["key", "ts", "row_id", "sink"],
         )
-        model.append((r.key, r.ts, r.row_id, elig[-1][1] if elig else None))
-    assert out == sorted(model)
+        versions: dict[str, list[tuple[int, str]]] = {}
+        for r in rdf.collect():
+            versions.setdefault(r.key, []).append((r.valid_from, r.sink))
+        model = []
+        for r in ldf.collect():
+            elig = sorted(
+                v for v in versions.get(r.key, []) if v[0] <= r.ts
+            )
+            model.append(
+                (r.key, r.ts, r.row_id, elig[-1][1] if elig else None)
+            )
+        assert out == sorted(model), seed
 
 
 def test_asof_null_before_first_version(spark):

@@ -10,7 +10,6 @@ from cernan_spark.operators.dedup import (
     exact_jaccard_pairs,
     minhash_lsh_candidates,
     shingles,
-    simhash_dedup,
 )
 
 DOCS = [
@@ -49,12 +48,6 @@ def test_exact_jaccard_verify(spark):
     }
     assert verified[(0, 3)] == 1.0
     assert 0.5 < verified[(0, 1)] < 1.0
-
-
-def test_simhash_groups_exact_dups(spark):
-    out = simhash_dedup(_docs(spark))
-    groups = {tuple(r["members"]) for r in out.collect()}
-    assert (0, 3) in groups  # identical docs share a fingerprint
 
 
 def test_simhash_near_dups_close(spark):
@@ -234,10 +227,11 @@ def test_minhash_resume_equals_one_pass(spark):
     """(shard-1 pairs) ∪ (shard-2 resumed from stored signatures) must
     equal the one-pass result over the union corpus — including twins
     that straddle the shard boundary, which only the resumed banding of
-    new-vs-all can find."""
+    new-vs-all can find. No bucket crosses the cap, so the delta
+    retracts nothing."""
     from cernan_spark.operators.dedup import (
         minhash_lsh_candidates,
-        minhash_resume_candidates,
+        minhash_resume_delta,
         minhash_signatures,
         seed_text_near_dups,
     )
@@ -251,15 +245,15 @@ def test_minhash_resume_equals_one_pass(spark):
     shard1 = docs.filter(F.col("doc_id") < 1_000_000)
     shard2 = docs.filter(F.col("doc_id") >= 1_000_000)
 
-    def pairset(df):
-        return {
-            (r["id_a"], r["id_b"], r["n_match"]) for r in df.collect()
-        }
+    def pairset(rows):
+        return {(r["id_a"], r["id_b"], r["n_match"]) for r in rows}
 
-    one_pass = pairset(minhash_lsh_candidates(docs))
-    run1 = pairset(minhash_lsh_candidates(shard1))
+    one_pass = pairset(minhash_lsh_candidates(docs).collect())
+    run1 = pairset(minhash_lsh_candidates(shard1).collect())
     sigs1 = minhash_signatures(shard1)
-    run2 = pairset(minhash_resume_candidates(shard2, sigs1))
+    delta = minhash_resume_delta(shard2, sigs1).collect()
+    assert {r["op"] for r in delta} == {"add"}
+    run2 = pairset(delta)
     assert run1 | run2 == one_pass
     assert run1 & run2 == set()          # no pair re-emitted
     assert any(b - a == 1_000_000 for a, b, _ in run2)  # cross-shard twins
@@ -329,12 +323,13 @@ def test_span_overlap_pairs(spark):
 def test_simhash_resume_equals_one_pass(spark):
     """(shard-1 pairs) ∪ (shard-2 resumed from stored fingerprints) must
     equal the one-pass SimHash radius search over the union corpus,
-    including cross-shard twins; no pair is re-emitted."""
+    including cross-shard twins; no pair is re-emitted and, with no
+    bucket crossing the cap, none is retracted."""
     from cernan_spark.operators.dedup import (
         seed_text_near_dups,
         simhash_fingerprints,
         simhash_hamming_pairs,
-        simhash_resume_pairs,
+        simhash_resume_delta,
     )
 
     docs = seed_text_near_dups(
@@ -344,13 +339,15 @@ def test_simhash_resume_equals_one_pass(spark):
     shard1 = docs.filter(F.col("doc_id") < 1_000_000)
     shard2 = docs.filter(F.col("doc_id") >= 1_000_000)
 
-    def pairset(df):
-        return {(r["id_a"], r["id_b"], r["hamming"]) for r in df.collect()}
+    def pairset(rows):
+        return {(r["id_a"], r["id_b"], r["hamming"]) for r in rows}
 
-    one_pass = pairset(simhash_hamming_pairs(docs))
-    run1 = pairset(simhash_hamming_pairs(shard1))
+    one_pass = pairset(simhash_hamming_pairs(docs).collect())
+    run1 = pairset(simhash_hamming_pairs(shard1).collect())
     fps1 = simhash_fingerprints(shard1)
-    run2 = pairset(simhash_resume_pairs(shard2, fps1))
+    delta = simhash_resume_delta(shard2, fps1).collect()
+    assert {r["op"] for r in delta} == {"add"}
+    run2 = pairset(delta)
     assert run1 | run2 == one_pass
     assert run1 & run2 == set()
     assert any(b - a == 1_000_000 for a, b, _ in run2)
@@ -400,14 +397,12 @@ def _apply_delta(prior: set, delta_rows, key=lambda r: (r["id_a"], r["id_b"])):
 
 
 def test_minhash_resume_delta_cap_crossing_equals_one_pass(spark):
-    """The exact divergence the plain resume caveat documents: a
-    boilerplate cluster whose LSH bucket crosses max_bucket only once the
-    second shard lands. The plain composition keeps shard-1's stale pairs
-    (≠ one-pass); applying the delta's retractions restores full
-    equality."""
+    """A boilerplate cluster whose LSH bucket crosses max_bucket only
+    once the second shard lands. Composing only the delta's adds keeps
+    shard-1's stale pairs (≠ one-pass); applying its retractions restores
+    full equality."""
     from cernan_spark.operators.dedup import (
         minhash_lsh_candidates,
-        minhash_resume_candidates,
         minhash_resume_delta,
         minhash_signatures,
     )
@@ -432,11 +427,9 @@ def test_minhash_resume_delta_cap_crossing_equals_one_pass(spark):
     one_pass = pairs(minhash_lsh_candidates(docs, max_bucket=cap))
     run1 = pairs(minhash_lsh_candidates(shard1, max_bucket=cap))
     sigs1 = minhash_signatures(shard1)
-    plain = run1 | pairs(
-        minhash_resume_candidates(shard2, sigs1, max_bucket=cap)
-    )
-    assert plain != one_pass  # the caveat is real: stale shard-1 pairs
     delta = minhash_resume_delta(shard2, sigs1, max_bucket=cap).collect()
+    adds = {(r["id_a"], r["id_b"]) for r in delta if r["op"] == "add"}
+    assert run1 | adds != one_pass  # adds alone keep stale shard-1 pairs
     assert _apply_delta(run1, delta) == one_pass
     retr = {(r["id_a"], r["id_b"]) for r in delta if r["op"] == "retract"}
     assert retr == {(2_000_000, 2_000_001), (2_000_000, 2_000_002),
@@ -452,7 +445,6 @@ def test_simhash_resume_delta_cap_crossing_equals_one_pass(spark):
         simhash_fingerprints,
         simhash_hamming_pairs,
         simhash_resume_delta,
-        simhash_resume_pairs,
     )
 
     base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -474,9 +466,9 @@ def test_simhash_resume_delta_cap_crossing_equals_one_pass(spark):
     one_pass = pairs(simhash_hamming_pairs(docs, max_bucket=cap))
     run1 = pairs(simhash_hamming_pairs(shard1, max_bucket=cap))
     fps1 = simhash_fingerprints(shard1)
-    plain = run1 | pairs(simhash_resume_pairs(shard2, fps1, max_bucket=cap))
-    assert plain != one_pass
     delta = simhash_resume_delta(shard2, fps1, max_bucket=cap).collect()
+    adds = {(r["id_a"], r["id_b"]) for r in delta if r["op"] == "add"}
+    assert run1 | adds != one_pass
     assert _apply_delta(run1, delta) == one_pass
 
 
