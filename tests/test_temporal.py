@@ -2,14 +2,16 @@
 
 Strategy mirrors the reference's quickcheck model tests: seeded-random
 inputs, two independent implementations (the broadcast sorted-array plan
-vs a Python as-of lookup; the column-expression counter vs a plain
-Python fold) asserted equal row-for-row.
+vs a union-tag window plan and vs a Python as-of lookup; the
+column-expression counter vs a plain Python fold) asserted equal
+row-for-row.
 """
 
 from __future__ import annotations
 
 import random
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cernan_spark.operators.temporal import (
@@ -38,27 +40,70 @@ def _asof_fixture(spark, seed: int):
     return ldf, rdf
 
 
-def test_asof_matches_python_model(spark):
-    for seed in (7, 41, 1999, 23):
+def _asof_union_model(left, right, key_cols, left_ts, right_ts, payload_cols):
+    """Reference as-of join as a union-tag window plan.
+
+    Right rows sort before left rows at the same timestamp, so
+    ``valid_from == ts`` is inclusive; duplicate right timestamps keep
+    the max payload, the broadcast form's struct tie-break.
+    """
+    lcols = left.columns
+    r_dedup = right.groupBy(*key_cols, F.col(right_ts).alias("__ts")).agg(
+        F.max(F.struct(*payload_cols)).alias("__payload")
+    )
+    l_tag = left.select(
+        *key_cols,
+        F.col(left_ts).alias("__ts"),
+        F.lit(1).alias("__side"),
+        F.struct(*lcols).alias("__row"),
+        F.lit(None).cast(r_dedup.schema["__payload"].dataType).alias("__payload"),
+    )
+    r_tag = r_dedup.select(
+        *key_cols,
+        "__ts",
+        F.lit(0).alias("__side"),
+        F.lit(None).cast(l_tag.schema["__row"].dataType).alias("__row"),
+        "__payload",
+    )
+    w = (
+        Window.partitionBy(*key_cols)
+        .orderBy("__ts", "__side")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    carried = l_tag.unionByName(r_tag).withColumn(
+        "__state", F.last("__payload", ignorenulls=True).over(w)
+    )
+    return carried.where(F.col("__side") == 1).select(
+        *[F.col(f"__row.{c}").alias(c) for c in lcols],
+        *[F.col(f"__state.{c}").alias(c) for c in payload_cols],
+    )
+
+
+def test_asof_broadcast_equals_union(spark):
+    for seed in (7, 41, 1999):
         ldf, rdf = _asof_fixture(spark, seed)
-        out = rows_to_tuples(
-            asof_join_broadcast(
-                ldf, rdf, ["key"], "ts", "valid_from", ["sink"]
-            ),
-            ["key", "ts", "row_id", "sink"],
+        a = asof_join_broadcast(ldf, rdf, ["key"], "ts", "valid_from", ["sink"])
+        b = _asof_union_model(ldf, rdf, ["key"], "ts", "valid_from", ["sink"])
+        cols = ["key", "ts", "row_id", "sink"]
+        assert rows_to_tuples(a, cols) == rows_to_tuples(b, cols), seed
+
+
+def test_asof_matches_python_model(spark):
+    ldf, rdf = _asof_fixture(spark, 23)
+    out = rows_to_tuples(
+        asof_join_broadcast(ldf, rdf, ["key"], "ts", "valid_from", ["sink"]),
+        ["key", "ts", "row_id", "sink"],
+    )
+    versions: dict[str, list[tuple[int, str]]] = {}
+    for r in rdf.collect():
+        versions.setdefault(r.key, []).append((r.valid_from, r.sink))
+    model = []
+    for r in ldf.collect():
+        elig = sorted(
+            v for v in versions.get(r.key, []) if v[0] <= r.ts
         )
-        versions: dict[str, list[tuple[int, str]]] = {}
-        for r in rdf.collect():
-            versions.setdefault(r.key, []).append((r.valid_from, r.sink))
-        model = []
-        for r in ldf.collect():
-            elig = sorted(
-                v for v in versions.get(r.key, []) if v[0] <= r.ts
-            )
-            model.append(
-                (r.key, r.ts, r.row_id, elig[-1][1] if elig else None)
-            )
-        assert out == sorted(model), seed
+        model.append((r.key, r.ts, r.row_id, elig[-1][1] if elig else None))
+    assert out == sorted(model)
 
 
 def test_asof_null_before_first_version(spark):
