@@ -1,17 +1,14 @@
-"""Binary wire-format handling: the native-protocol and Avro source framing
-as column expressions over BinaryType.
+"""The native protocol's u32-BE length framing.
 
-Reference:
-* native TCP: u32-BE length-framed protobuf payloads
-  (/root/reference/src/source/native.rs:63-203; proto
-  resources/protobufs/native.proto:42-100);
-* avro TCP: fixed header {version u32, control u32, id u64, order_by u64}
-  followed by the Avro blob (/root/reference/src/source/avro.rs:27-163).
+Reference: cernan's native TCP source reads u32-BE length-framed protobuf
+payloads (src/source/native.rs:63-203; proto
+resources/protobufs/native.proto:42-100).
 
-Spark-first: big-endian integers are decoded with substring+hex+conv column
-expressions (JVM-side); frame splitting of a multi-frame byte stream is a
-vectorized mapInPandas (struct.unpack over Arrow batches) because variable-
-length splitting is not expressible as a single column op.
+`iter_frames` is the one frame scan: `frames_from_stream` (mapInPandas over
+Arrow batches, since variable-length splitting is not one column op) and
+both `cernan_native` readers (sources/native_datasource.py) call it.
+`encode_frames` prepends the length with hex → unhex column expressions.
+The Avro source's header lives in functions/avrowire.py.
 """
 
 from __future__ import annotations
@@ -20,36 +17,22 @@ import struct
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def be_uint(col: Column, offset: int, nbytes: int) -> Column:
-    """Big-endian unsigned int from a binary column (1-based offset)."""
-    return F.conv(F.hex(F.substring(col, offset, nbytes)), 16, 10).cast("long")
-
-
-AVRO_HEADER_LEN = 4 + 4 + 8 + 8
-
-
-def decode_avro_header(df: DataFrame, bin_col: str = "payload") -> DataFrame:
-    """Header fields + blob as columns (avro.rs:80-163): version/control
-    u32-BE, id/order_by u64-BE, rest = Avro blob. Pure expressions."""
-    c = F.col(bin_col)
-    return df.select(
-        "*",
-        be_uint(c, 1, 4).alias("version"),
-        be_uint(c, 5, 4).alias("control"),
-        be_uint(c, 9, 8).alias("id"),
-        be_uint(c, 17, 8).alias("order_by"),
-        F.expr(f"substring({bin_col}, {AVRO_HEADER_LEN + 1}, 1073741824)").alias(
-            "avro_blob"
-        ),
-    )
-
-
-#: control-word bit: sync (sender expects an ACK) — avro.rs:36-44
-CONTROL_SYNC = 1
+def iter_frames(blob: bytes) -> Iterator[tuple[int, bytes]]:
+    """Each complete frame of ``blob`` with the offset just past it. A
+    trailing partial frame is not yielded: a live stream's last frame may
+    still be arriving (native.rs:63-133)."""
+    off = 0
+    while off + 4 <= len(blob):
+        (n,) = struct.unpack(">I", blob[off : off + 4])
+        end = off + 4 + n
+        if end > len(blob):
+            return
+        yield end, blob[off + 4 : end]
+        off = end
 
 
 def frames_from_stream(
@@ -63,17 +46,10 @@ def frames_from_stream(
         for pdf in batches:
             ids, idxs, frames = [], [], []
             for cid, blob in zip(pdf[id_col], pdf[bin_col]):
-                off, i = 0, 0
-                blob = bytes(blob)
-                while off + 4 <= len(blob):
-                    (n,) = struct.unpack(">I", blob[off : off + 4])
-                    if off + 4 + n > len(blob):
-                        break  # trailing partial frame → dropped (counted upstream)
-                    frames.append(blob[off + 4 : off + 4 + n])
+                for i, (_, frame) in enumerate(iter_frames(bytes(blob))):
+                    frames.append(frame)
                     ids.append(cid)
                     idxs.append(i)
-                    off += 4 + n
-                    i += 1
             yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame": frames})
 
     return df.mapInPandas(split, f"{id_col} long, frame_idx int, frame binary")

@@ -13,18 +13,20 @@ decode mapping /root/reference/src/source/native.rs:134-203):
 
 No protobuf library exists in this image; the format is proto2's simple
 varint + length-delimited TLV, so the codec here is ~100 lines of plain
-Python. It runs inside ``mapInPandas`` over Arrow batches (one Python call
-per batch, not per row) — the same pattern as the frame splitter
-(functions/framing.py). Unknown fields are skipped per proto2 rules;
-repeated doubles are accepted both packed (wire type 2) and unpacked
-(wire type 1).
+Python. Unknown fields are skipped per proto2 rules; repeated doubles are
+accepted both packed (wire type 2) and unpacked (wire type 1).
 
-Decode semantics mirror native.rs exactly: points with no samples are
-dropped (native.rs:151-153); the first sample seeds the Telemetry and the
-rest are ``insert``ed (native.rs:156,176-178) — in the DataFrame model that
-is one row per sample, merged downstream by the per-kind bucket laws;
-``ts = (timestamp_ms as f64 * 0.001) as i64`` (native.rs:149, FIXME #166
-float-truncation kept bit-for-bit).
+`frame_rows` is the one frame → rows step: ``decode_native_frames`` runs it
+inside ``mapInPandas`` over Arrow batches (one Python call per batch, not
+per row), and both ``cernan_native`` readers (sources/native_datasource.py)
+run it per spool frame. Its semantics mirror native.rs exactly: points with
+no samples are dropped (native.rs:151-153); the first sample seeds the
+Telemetry and the rest are ``insert``ed (native.rs:156,176-178) — in the
+DataFrame model that is one row per sample, merged downstream by the
+per-kind bucket laws; ``ts = (timestamp_ms as f64 * 0.001) as i64``
+(native.rs:149, FIXME #166 float-truncation kept bit-for-bit); a malformed
+frame is one ``record_kind='invalid'`` row (native.rs:198-202 logs and
+drops it). `encode_telemetry_frame` is the matching spool-frame encoder.
 """
 
 from __future__ import annotations
@@ -143,6 +145,13 @@ def encode_payload(points: list[bytes] = (), lines: list[bytes] = ()) -> bytes:
     return bytes(out)
 
 
+def encode_telemetry_frame(name: str, samples, **telemetry) -> bytes:
+    """One Payload holding one Telemetry (``encode_telemetry`` arguments),
+    u32-BE length-prefixed: the frame a spool file holds."""
+    frame = encode_payload(points=[encode_telemetry(name, samples, **telemetry)])
+    return struct.pack(">I", len(frame)) + frame
+
+
 # ---------------------------------------------------------------------------
 # message decode
 # ---------------------------------------------------------------------------
@@ -252,16 +261,37 @@ DECODED_SCHEMA = (
     "event_epoch long, tags map<string,string>, bounds array<double>, "
     "path string, payload string"
 )
+_DECODED_COLUMNS = [f.split(" ", 1)[0] for f in DECODED_SCHEMA.split(", ")]
+
+
+def frame_rows(conn_id: int, frame_idx: int, frame: bytes) -> list[tuple]:
+    """The ``DECODED_SCHEMA`` rows of one length-stripped frame: one
+    telemetry row per sample (native.rs:151-178 multi-sample insert), none
+    for a point with no samples (native.rs:151-153), one row per log line. A malformed frame
+    yields ONE ``record_kind='invalid'`` row instead of failing the job —
+    the reference logs and drops bad payloads (native.rs:198-202 returns
+    Err), it never aborts the accept loop."""
+    try:
+        points, lines = decode_payload(frame)
+    except Exception:  # noqa: BLE001 — malformed wire bytes
+        return [(conn_id, frame_idx, "invalid") + (None,) * 10]
+    rows = []
+    for p in points:
+        epoch = int(p["timestamp_ms"] * 0.001)  # native.rs:149
+        for i, s in enumerate(p["samples"]):
+            rows.append((conn_id, frame_idx, "telemetry", p["name"], i, s,
+                         p["kind"], p["persist"], epoch, p["metadata"],
+                         p["bin_bounds"] or None, None, None))
+    for ln in lines:
+        rows.append((conn_id, frame_idx, "log", None, None, None, None, None,
+                     int(ln["timestamp_ms"] * 0.001), ln["metadata"],
+                     None, ln["path"], ln["value"]))
+    return rows
 
 
 def decode_native_frames(frames: DataFrame, frame_col: str = "frame") -> DataFrame:
     """Decode length-stripped native frames (frames_from_stream output) into
-    telemetry rows (one per sample, native.rs:151-178 multi-sample insert)
-    and log rows. Arrow-batched; empty-sample points dropped like the
-    reference. A malformed/truncated frame yields ONE row with
-    record_kind='invalid' instead of failing the job — the reference logs
-    and drops bad payloads (native.rs:198-202 returns Err), it never
-    aborts the accept loop."""
+    `frame_rows`' telemetry, log and invalid rows. Arrow-batched."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -269,38 +299,8 @@ def decode_native_frames(frames: DataFrame, frame_col: str = "frame") -> DataFra
             for cid, fidx, blob in zip(
                 pdf["conn_id"], pdf["frame_idx"], pdf[frame_col]
             ):
-                try:
-                    points, lines = decode_payload(bytes(blob))
-                except Exception:  # noqa: BLE001 — malformed wire bytes
-                    rows.append(
-                        (cid, fidx, "invalid", None, None, None, None,
-                         None, None, None, None, None, None)
-                    )
-                    continue
-                for p in points:
-                    if not p["samples"]:
-                        continue  # native.rs:151-153
-                    epoch = int(p["timestamp_ms"] * 0.001)  # native.rs:149
-                    for i, s in enumerate(p["samples"]):
-                        rows.append(
-                            (cid, fidx, "telemetry", p["name"], i, s,
-                             p["kind"], p["persist"], epoch, p["metadata"],
-                             p["bin_bounds"] or None, None, None)
-                        )
-                for ln in lines:
-                    rows.append(
-                        (cid, fidx, "log", None, None, None, None, None,
-                         int(ln["timestamp_ms"] * 0.001), ln["metadata"],
-                         None, ln["path"], ln["value"])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conn_id", "frame_idx", "record_kind", "name",
-                    "sample_idx", "value", "kind", "persist", "event_epoch",
-                    "tags", "bounds", "path", "payload",
-                ],
-            )
+                rows += frame_rows(cid, fidx, bytes(blob))
+            yield pd.DataFrame(rows, columns=_DECODED_COLUMNS)
 
     return frames.mapInPandas(run, DECODED_SCHEMA)
 

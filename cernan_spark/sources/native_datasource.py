@@ -18,14 +18,17 @@ Architecture (the 100 TB plan):
 * **conn_id comes from the file NAME** (``conn-<id>.bin``), not the
   listing order, so the mapping is stable under re-listing/retries —
   the same identity discipline as the file tailer's (dev, inode) key
-  (sources/filetail.py).
-* The per-frame decode is `functions/nativeproto.py`'s pure-Python
-  proto2 codec — identical semantics to the mapInPandas path
-  (one row per sample, empty-sample points dropped per native.rs:151-153,
-  malformed frames yield one ``record_kind='invalid'`` row instead of
-  failing the task, native.rs:198-202).
-* A trailing partial frame at EOF is dropped, mirroring
-  `functions/framing.frames_from_stream` (a live spool's last frame may
+  (sources/filetail.py). Both readers list only such files (`_spool_names`);
+  the writer makes no other name.
+* Both readers decode through one range decoder, `_decode_range`: the
+  frame scan `functions/framing.iter_frames` and the frame → rows step
+  `functions/nativeproto.frame_rows` that ``decode_native_frames`` also
+  runs (one row per sample, empty-sample points dropped per
+  native.rs:151-153, malformed frames yield one ``record_kind='invalid'``
+  row instead of failing the task, native.rs:198-202). The batch reader
+  decodes a whole file, the stream reader the bytes appended since its
+  last offset.
+* A trailing partial frame is not decoded (a live spool's last frame may
   still be being written — the tail-read contract of filetail.py).
 """
 
@@ -33,7 +36,6 @@ from __future__ import annotations
 
 import os
 import re
-import struct
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -44,20 +46,40 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-# Column order must match functions/nativeproto.DECODED_SCHEMA.
-_SCHEMA = (
-    "conn_id long, frame_idx int, record_kind string, name string, "
-    "sample_idx int, value double, kind string, persist boolean, "
-    "event_epoch long, tags map<string,string>, bounds array<double>, "
-    "path string, payload string"
+from cernan_spark.functions.framing import iter_frames
+from cernan_spark.functions.nativeproto import (
+    DECODED_SCHEMA,
+    encode_telemetry_frame,
+    frame_rows,
 )
 
-_CONN_RE = re.compile(r"conn-(\d+)\.bin$")
+_CONN_RE = re.compile(r"conn-(\d+)\.bin")
+
+
+def _spool_names(spool: str) -> list[str]:
+    """The ``conn-<id>.bin`` file names of a spool directory, sorted."""
+    if not os.path.isdir(spool):
+        return []
+    return sorted(n for n in os.listdir(spool) if _CONN_RE.fullmatch(n))
+
+
+def _decode_range(path: str, lo: int, hi: int, fidx0: int):
+    """``frame_rows`` of every complete frame in bytes [lo, hi) of the spool
+    file ``path``, numbered from ``fidx0``; also the offset just past the
+    last complete frame and the next frame index."""
+    cid = int(_CONN_RE.fullmatch(os.path.basename(path)).group(1))
+    with open(path, "rb") as fh:
+        fh.seek(lo)
+        blob = fh.read(hi - lo)
+    rows, end, fidx = [], 0, fidx0
+    for end, frame in iter_frames(blob):
+        rows += frame_rows(cid, fidx, frame)
+        fidx += 1
+    return rows, lo + end, fidx
 
 
 class _SpoolFile(InputPartition):
-    def __init__(self, conn_id: int, path: str):
-        self.conn_id = conn_id
+    def __init__(self, path: str):
         self.path = path
 
 
@@ -67,56 +89,18 @@ class CernanNativeReader(DataSourceReader):
         if not self._path:
             raise ValueError("cernan_native requires a path (spool dir)")
 
-    def _files(self) -> list[str]:
-        if os.path.isdir(self._path):
-            names = sorted(os.listdir(self._path))
-            return [os.path.join(self._path, n) for n in names if n.endswith(".bin")]
-        return [self._path]
-
     def partitions(self):
-        parts = []
-        for i, f in enumerate(self._files()):
-            m = _CONN_RE.search(f)
-            parts.append(_SpoolFile(int(m.group(1)) if m else i, f))
+        parts = [
+            _SpoolFile(os.path.join(self._path, n))
+            for n in _spool_names(self._path)
+        ]
         if not parts:
             raise ValueError(f"cernan_native: no .bin spool files under {self._path}")
         return parts
 
     def read(self, partition: _SpoolFile):
-        # Import inside the task: the class is pickled by reference and
-        # the executor resolves cernan_spark from its own sys.path.
-        from cernan_spark.functions.nativeproto import decode_payload
-
-        with open(partition.path, "rb") as fh:
-            blob = fh.read()
-        cid = partition.conn_id
-        off, fidx = 0, 0
-        while off + 4 <= len(blob):
-            (n,) = struct.unpack(">I", blob[off : off + 4])
-            if off + 4 + n > len(blob):
-                break  # trailing partial frame → dropped (frames_from_stream contract)
-            frame = blob[off + 4 : off + 4 + n]
-            off += 4 + n
-            try:
-                points, lines = decode_payload(frame)
-            except Exception:  # noqa: BLE001 — malformed wire bytes
-                yield (cid, fidx, "invalid", None, None, None, None,
-                       None, None, None, None, None, None)
-                fidx += 1
-                continue
-            for p in points:
-                if not p["samples"]:
-                    continue  # native.rs:151-153
-                epoch = int(p["timestamp_ms"] * 0.001)  # native.rs:149
-                for i, s in enumerate(p["samples"]):
-                    yield (cid, fidx, "telemetry", p["name"], i, s,
-                           p["kind"], p["persist"], epoch, p["metadata"],
-                           p["bin_bounds"] or None, None, None)
-            for ln in lines:
-                yield (cid, fidx, "log", None, None, None, None, None,
-                       int(ln["timestamp_ms"] * 0.001), ln["metadata"],
-                       None, ln["path"], ln["value"])
-            fidx += 1
+        path = partition.path
+        return iter(_decode_range(path, 0, os.path.getsize(path), 0)[0])
 
 
 class CernanNativeDataSource(DataSource):
@@ -125,7 +109,7 @@ class CernanNativeDataSource(DataSource):
         return "cernan_native"
 
     def schema(self) -> str:
-        return _SCHEMA
+        return DECODED_SCHEMA
 
     def reader(self, schema) -> CernanNativeReader:
         return CernanNativeReader(self.options)
@@ -142,11 +126,6 @@ def write_spool(rows, out_dir: str, n_conns: int) -> None:
     row dict ``{conn, name, samples, kind, ts_ms, persist?, tags?}``
     becomes ONE framed Payload appended to ``conn-<conn>.bin`` in input
     order — the byte layout native.rs reads off the socket."""
-    from cernan_spark.functions.nativeproto import (
-        encode_payload,
-        encode_telemetry,
-    )
-
     os.makedirs(out_dir, exist_ok=True)
     handles = {}
     try:
@@ -154,16 +133,14 @@ def write_spool(rows, out_dir: str, n_conns: int) -> None:
             c = int(r["conn"]) % n_conns
             if c not in handles:
                 handles[c] = open(os.path.join(out_dir, f"conn-{c}.bin"), "wb")
-            t = encode_telemetry(
+            handles[c].write(encode_telemetry_frame(
                 r["name"],
                 list(r["samples"]),
                 kind=r.get("kind", "SUM"),
                 persist=bool(r.get("persist", False)),
                 timestamp_ms=int(r["ts_ms"]),
                 metadata=r.get("tags"),
-            )
-            frame = encode_payload(points=[t])
-            handles[c].write(struct.pack(">I", len(frame)) + frame)
+            ))
     finally:
         for fh in handles.values():
             fh.close()
@@ -201,27 +178,20 @@ class CernanNativeWriter(DataSourceWriter):
 
         from pyspark import TaskContext
 
-        from cernan_spark.functions.nativeproto import (
-            encode_payload,
-            encode_telemetry,
-        )
-
         pid = TaskContext.get().partitionId()
         os.makedirs(self._path, exist_ok=True)
         tmp = os.path.join(self._path, f".tmp-conn-{pid}-{uuid.uuid4().hex}")
         n = 0
         with open(tmp, "wb") as fh:
             for r in rows:
-                t = encode_telemetry(
+                fh.write(encode_telemetry_frame(
                     r["name"],
                     [float(s) for s in r["samples"]],
                     kind=r["kind"],
                     persist=bool(r["persist"]) if "persist" in r.__fields__ else False,
                     timestamp_ms=int(r["ts_ms"]),
                     metadata=dict(r["tags"]) if "tags" in r.__fields__ and r["tags"] is not None else None,
-                )
-                frame = encode_payload(points=[t])
-                fh.write(struct.pack(">I", len(frame)) + frame)
+                ))
                 n += 1
         return _SpoolCommit(pid, tmp, n)
 
@@ -266,53 +236,12 @@ class CernanNativeStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {}
 
-    def _decode_range(self, fname: str, lo: int, hi: int, fidx0: int):
-        from cernan_spark.functions.nativeproto import decode_payload
-
-        m = _CONN_RE.search(fname)
-        cid = int(m.group(1)) if m else -1
-        with open(os.path.join(self._path, fname), "rb") as fh:
-            fh.seek(lo)
-            blob = fh.read(hi - lo)
-        off, fidx = 0, fidx0
-        rows = []
-        while off + 4 <= len(blob):
-            (n,) = struct.unpack(">I", blob[off : off + 4])
-            if off + 4 + n > len(blob):
-                break
-            frame = blob[off + 4 : off + 4 + n]
-            off += 4 + n
-            try:
-                points, lines = decode_payload(frame)
-            except Exception:  # noqa: BLE001
-                rows.append((cid, fidx, "invalid", None, None, None, None,
-                             None, None, None, None, None, None))
-                fidx += 1
-                continue
-            for p in points:
-                if not p["samples"]:
-                    continue
-                epoch = int(p["timestamp_ms"] * 0.001)
-                for i, s in enumerate(p["samples"]):
-                    rows.append((cid, fidx, "telemetry", p["name"], i, s,
-                                 p["kind"], p["persist"], epoch, p["metadata"],
-                                 p["bin_bounds"] or None, None, None))
-            for ln in lines:
-                rows.append((cid, fidx, "log", None, None, None, None, None,
-                             int(ln["timestamp_ms"] * 0.001), ln["metadata"],
-                             None, ln["path"], ln["value"]))
-            fidx += 1
-        return rows, lo + off, fidx
-
     def read(self, start: dict):
         rows, end = [], {}
-        names = sorted(
-            f for f in os.listdir(self._path) if f.endswith(".bin")
-        ) if os.path.isdir(self._path) else []
-        for fname in names:
+        for fname in _spool_names(self._path):
+            path = os.path.join(self._path, fname)
             lo, fidx = start.get(fname, [0, 0])
-            size = os.path.getsize(os.path.join(self._path, fname))
-            r, consumed, fidx2 = self._decode_range(fname, lo, size, fidx)
+            r, consumed, fidx2 = _decode_range(path, lo, os.path.getsize(path), fidx)
             rows.extend(r)
             end[fname] = [consumed, fidx2]
         for fname, pos in start.items():  # a file vanished: hold its offset
@@ -324,8 +253,8 @@ class CernanNativeStreamReader(SimpleDataSourceStreamReader):
         for fname, (hi, _) in end.items():
             lo, fidx = start.get(fname, [0, 0])
             if hi > lo:
-                r, _, _ = self._decode_range(fname, lo, hi, fidx)
-                rows.extend(r)
+                path = os.path.join(self._path, fname)
+                rows.extend(_decode_range(path, lo, hi, fidx)[0])
         return iter(rows)
 
     def commit(self, end: dict) -> None:

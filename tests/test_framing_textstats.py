@@ -7,12 +7,8 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
-from cernan_spark.functions.framing import (
-    AVRO_HEADER_LEN,
-    decode_avro_header,
-    encode_frames,
-    frames_from_stream,
-)
+from cernan_spark.functions.avrowire import decode_avro_payload, encode_avro_payload
+from cernan_spark.functions.framing import encode_frames, frames_from_stream
 from cernan_spark.operators.aggregate import prometheus_windowed_summaries
 from cernan_spark.operators.textstats import (
     doc_fingerprint,
@@ -22,14 +18,14 @@ from cernan_spark.operators.textstats import (
 )
 
 
-def test_avro_header_roundtrip(spark):
+def test_avro_header_roundtrip():
     blob = b"avro-bytes-here"
-    payload = struct.pack(">IIQQ", 1, 1, 42, 777) + blob
-    df = spark.createDataFrame([(payload,)], "payload binary")
-    r = decode_avro_header(df).collect()[0]
+    # v1: the fixed 24-byte header, then the blob
+    r = decode_avro_payload(struct.pack(">IIQQ", 1, 1, 42, 777) + blob)
     assert (r["version"], r["control"], r["id"], r["order_by"]) == (1, 1, 42, 777)
-    assert bytes(r["avro_blob"]) == blob
-    assert AVRO_HEADER_LEN == 24
+    assert r["avro_blob"] == blob
+    # v2 (the encoder's default): a metadata count byte follows the header
+    assert decode_avro_payload(encode_avro_payload(blob))["avro_blob"] == blob
 
 
 def test_frame_split_and_reencode(spark):

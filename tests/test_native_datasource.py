@@ -163,3 +163,95 @@ def test_stream_tails_new_frames_and_holds_partials(registered, tmp_path):
         assert rows2 == ["s1", "s2", "s3"]  # no dup of s1, no partial ghost
     finally:
         q.stop()
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_conn_id_only_from_conn_file_names(registered, tmp_path):
+    """A stray ``.bin`` that is not ``conn-<id>.bin`` is no connection:
+    both readers skip it, rather than numbering it by listing order or -1."""
+    spark = registered
+    d = str(tmp_path / "spool_names")
+    write_spool(
+        [{"conn": 0, "name": "stray", "samples": [9.0], "kind": "SUM", "ts_ms": 0},
+         {"conn": 1, "name": "real", "samples": [1.0], "kind": "SUM", "ts_ms": 1000}],
+        d, 2,
+    )
+    os.rename(os.path.join(d, "conn-0.bin"), os.path.join(d, "a.bin"))
+    batch = spark.read.format("cernan_native").load(d).collect()
+    assert [(r.conn_id, r.name) for r in batch] == [(1, "real")]
+
+    q = (
+        spark.readStream.format("cernan_native").load(d)
+        .writeStream.format("memory").queryName("natstream_names")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt_names"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        got = spark.sql("SELECT conn_id, name FROM natstream_names").collect()
+        assert [(r.conn_id, r.name) for r in got] == [(1, "real")]
+    finally:
+        q.stop()
+
+
+def test_stream_rows_equal_batch_rows(registered, tmp_path):
+    """Frames appended over two micro-batches (a multi-sample point, a
+    point with no samples, a log line, a malformed complete frame, a frame
+    split across the batches and a trailing partial frame) stream out as
+    exactly the rows, all columns, the batch reader reads off the final
+    spool: frame_idx carries across batches and the invalid row appears."""
+    from cernan_spark.functions.nativeproto import (
+        encode_logline,
+        encode_payload,
+        encode_telemetry,
+        encode_telemetry_frame,
+    )
+
+    spark = registered
+    sd = str(tmp_path / "spool_parity")
+    os.makedirs(sd)
+    multi = encode_telemetry_frame(
+        "multi", [1.0, 2.5, -3.0], kind="SUMMARIZE", timestamp_ms=1999,
+        metadata={"h": "x"}, bin_bounds=[1.0, 10.0],
+    )
+    empty = encode_payload(
+        points=[encode_telemetry("empty", [], kind="SUM", timestamp_ms=5000)],
+        lines=[encode_logline("/var/log/a", "hello", {"k": "v"}, 7250)],
+    )
+    empty = struct.pack(">I", len(empty)) + empty
+    split = encode_telemetry_frame("split", [4.0, 5.0], kind="SET",
+                                   persist=True, timestamp_ms=9999)
+    bad = b"\x0c\xff\x03"
+    with open(os.path.join(sd, "conn-0.bin"), "wb") as fh:
+        fh.write(multi + empty + split[:7])
+
+    q = (
+        spark.readStream.format("cernan_native").load(sd)
+        .writeStream.format("memory").queryName("natstream_parity")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt_parity"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        first = spark.table("natstream_parity").collect()
+        assert {r.frame_idx for r in first} == {0, 1}
+        with open(os.path.join(sd, "conn-0.bin"), "ab") as fh:
+            fh.write(split[7:] + struct.pack(">I", len(bad)) + bad + multi)
+            fh.write(struct.pack(">I", 50) + b"partial")
+        q.processAllAvailable()
+        streamed = _sorted_rows(spark.table("natstream_parity"))
+    finally:
+        q.stop()
+
+    batch = _sorted_rows(spark.read.format("cernan_native").load(sd))
+    assert streamed == batch
+    assert sorted({(r[1], r[2]) for r in batch}) == [
+        (0, "telemetry"), (1, "log"), (2, "telemetry"), (3, "invalid"),
+        (4, "telemetry"),
+    ]
+    assert len(batch) == 3 + 1 + 2 + 1 + 3

@@ -57,9 +57,6 @@ ALLOWED = {
     "operators.filters.apply_programmable_safe": (
         "capability: COVERAGE 'ProgrammableFilter (Lua hook surface)'"
     ),
-    "functions.framing.decode_avro_header": (
-        "capability: COVERAGE 'Avro TCP (v1/v2 header + KV metadata ...)'"
-    ),
     "functions.jsonlog.json_encode": (
         "capability: COVERAGE 'JSONEncodeFilter (parsed ⊳ fields ⊳ meta)'"
     ),
