@@ -6160,6 +6160,7 @@ def q_native_spool(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/native_datasource.py, native.rs:63-133). One InputPartition
     per spool file; decode runs executor-side; the oracle re-derives
     every decoded row from the events table."""
+    import atexit
     import shutil
     import tempfile
 
@@ -6170,37 +6171,33 @@ def q_native_spool(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _utc(spark)
     spark.dataSource.register(CernanNativeDataSource)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"cernan_spool_{os.path.basename(os.path.normpath(sf_dir))}",
+    # a fresh spool per call, removed at exit: a directory another run
+    # left behind may hold bytes an older encoder wrote
+    kinds = ["SUM", "SET", "SUMMARIZE"]
+    ev = (
+        _events(spark, sf_dir)
+        .select(
+            "event_id",
+            F.unix_timestamp(F.col("ts").cast("timestamp")).alias("sec"),
+            "event_type",
+            "value",
+        )
+        .orderBy("event_id")
+        .collect()
     )
-    if not os.path.isdir(base):
-        kinds = ["SUM", "SET", "SUMMARIZE"]
-        ev = (
-            _events(spark, sf_dir)
-            .select(
-                "event_id",
-                F.unix_timestamp(F.col("ts").cast("timestamp")).alias("sec"),
-                "event_type",
-                "value",
-            )
-            .orderBy("event_id")
-            .collect()
-        )
-        rows = (
-            {
-                "conn": r.event_id % 4,
-                "name": r.event_type,
-                "samples": [r.value],
-                "kind": kinds[r.event_id % 3],
-                "ts_ms": r.sec * 1000 + r.event_id % 1000,
-            }
-            for r in ev
-        )
-        tmp = base + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        write_spool(rows, tmp, 4)
-        os.replace(tmp, base)
+    rows = (
+        {
+            "conn": r.event_id % 4,
+            "name": r.event_type,
+            "samples": [r.value],
+            "kind": kinds[r.event_id % 3],
+            "ts_ms": r.sec * 1000 + r.event_id % 1000,
+        }
+        for r in ev
+    )
+    base = tempfile.mkdtemp(prefix="cernan_spool_")
+    atexit.register(shutil.rmtree, base, True)
+    write_spool(rows, base, 4)
     df = spark.read.format("cernan_native").load(base)
     return df.select(
         "conn_id", "frame_idx", "name", "sample_idx", "value", "kind",

@@ -33,29 +33,47 @@ KIND_SUMMARIZE = "SUMMARIZE"
 KIND_HISTOGRAM = "HISTOGRAM"
 
 
-def _slice_exprs(line: Column) -> tuple[Column, Column, Column]:
-    """(name, val_str, tyrate) via position arithmetic — the reference's
-    find(':')/find('|') scan (statsd.rs:553-573), cheap string ops only:
+def _slice(df: DataFrame, line: Column) -> DataFrame:
+    """``df`` plus ``_sl`` = struct(n, v, t), the reference's single
+    find(':')/find('|') scan (statsd.rs:553-573):
 
-    * name   = chars before the FIRST ':' ('' when absent / line starts ':')
-    * val_str= chars between the first ':' and the FIRST '|' after it
-    * tyrate = everything after that '|'
+    * n = chars before the FIRST ':' ('' when absent / line starts ':')
+    * v = chars between the first ':' and the FIRST '|' after it
+    * t = everything after that '|'
+
+    The colon is found once and the pipe once, on the line itself from
+    just past the colon; each slice is then one ``substr`` of the line.
+    Both positions are staged in their own projection, each consumed
+    more than once above it, so CollapseProject keeps them apart rather
+    than copying the scans into every slice. The slices materialize
+    behind a single-element ``explode`` (see :func:`parse_statsd_lines`).
     """
-    colon = F.instr(line, ":")
-    name = F.when(colon > 0, line.substr(F.lit(1), colon - 1)).otherwise(
-        F.lit("")
+    colon = df.select("*", F.instr(line, ":").alias("_sc"))
+    c = F.col("_sc")
+    # 0 without a colon: a pipe before no colon slices nothing
+    pipe = colon.select(
+        "*",
+        F.when(
+            c > 0, F.call_function("locate", F.lit("|"), line, c + 1)
+        ).otherwise(F.lit(0)).alias("_sp"),
     )
-    rest = F.when(colon > 0, line.substr(colon + 1, F.length(line))).otherwise(
-        F.lit("")
+    p = F.col("_sp")
+    to_end = F.lit(1 << 30)  # open-ended substr length
+    return pipe.select(
+        "*",
+        F.explode(
+            F.array(
+                F.struct(
+                    F.when(c > 0, line.substr(F.lit(1), c - 1))
+                    .otherwise(F.lit("")).alias("n"),
+                    F.when(p > 0, line.substr(c + 1, p - c - 1))
+                    .otherwise(F.lit("")).alias("v"),
+                    F.when(p > 0, line.substr(p + 1, to_end))
+                    .otherwise(F.lit("")).alias("t"),
+                )
+            )
+        ).alias("_sl"),
     )
-    pipe = F.instr(rest, "|")
-    val_str = F.when(pipe > 0, rest.substr(F.lit(1), pipe - 1)).otherwise(
-        F.lit("")
-    )
-    tyrate = F.when(pipe > 0, rest.substr(pipe + 1, F.length(rest))).otherwise(
-        F.lit("")
-    )
-    return name, val_str, tyrate
 
 
 def _outputs_from_slices(
@@ -161,6 +179,12 @@ def parse_statsd_lines(
     (statsd.rs:105-115). The rule's bounds are not carried per row: the
     aggregate decides them once (``bounds_expr=mask_bounds_expr(masks)``).
 
+    Each line is scanned once, as the reference scans it
+    (statsd.rs:553-573): the first ':' is found once, the first '|' after
+    it once, on the line itself, and each of the three raw slices (name,
+    value, type-and-rate) is one ``substr`` of the line — no copy of the
+    text after the colon is built and rescanned (:func:`_slice`).
+
     The three raw slices materialize ONCE per row behind a single-element
     ``explode`` (a Generate node): CollapseProject cannot inline the
     consumer projection through it, so the five outputs read cheap struct
@@ -172,17 +196,7 @@ def parse_statsd_lines(
     consumer column — measured 2× slower on the bucket aggregates than
     this form).
     """
-    name, val_str, tyrate = _slice_exprs(F.col(line_col))
-    sliced = df.select(
-        "*",
-        F.explode(
-            F.array(
-                F.struct(
-                    name.alias("n"), val_str.alias("v"), tyrate.alias("t")
-                )
-            )
-        ).alias("_sl"),
-    )
+    sliced = _slice(df, F.col(line_col))
     out = sliced.select(
         *df.columns,
         *_outputs_from_slices(
@@ -193,10 +207,16 @@ def parse_statsd_lines(
         out = out.filter(F.col("is_valid"))
 
     if masks is not None:
-        matched = mask_bounds_expr(masks).isNotNull()
-        masked = (F.col("kind") == KIND_SUMMARIZE) & matched
-        out = out.withColumn(
-            "kind",
-            F.when(masked, F.lit(KIND_HISTOGRAM)).otherwise(F.col("kind")),
-        )
+        out = upgrade_histograms(out, mask_bounds_expr(masks))
     return out
+
+
+def upgrade_histograms(parsed: DataFrame, bounds: Column) -> DataFrame:
+    """Upgrade the Summarize rows of parsed statsd whose ``bounds`` (a
+    :func:`mask_bounds_expr`) is non-null to Histogram. Taking the built
+    expression lets a caller that also hands it to the aggregate collect
+    the mask table once."""
+    masked = (F.col("kind") == KIND_SUMMARIZE) & bounds.isNotNull()
+    return parsed.withColumn(
+        "kind", F.when(masked, F.lit(KIND_HISTOGRAM)).otherwise(F.col("kind"))
+    )

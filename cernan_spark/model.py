@@ -8,6 +8,7 @@ Tests compare the Spark operators against this model on seeded corpora.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 
@@ -58,7 +59,8 @@ def parse_statsd_py(line: str) -> ParsedMetric | None:
     if ty not in ("c", "g", "ms", "h"):
         return None
     if rate is not None:
-        val = val * (1.0 / rate)
+        # f64 arithmetic in the reference: a rate of 0 scales by +inf
+        val = val * (1.0 / rate if rate else math.inf)
     if ty == "c":
         return ParsedMetric(name, val, "SUM", False)
     if ty == "g":

@@ -44,6 +44,15 @@ def enrich_tags_fast(
     would make 'k=v,…' ambiguous, so two tag sets could share one
     ``tags_key`` aggregate group.
     """
+    return df.withColumns(tag_columns(tag_dicts, role_col, tool_col))
+
+
+def tag_columns(
+    tag_dicts: DataFrame, role_col: str = "role", tool_col: str = "tool"
+) -> dict[str, Column]:
+    """The ``tags`` and ``tags_key`` columns :func:`enrich_tags_fast` adds,
+    built from one collect of the dictionaries, so that one build can
+    enrich several frames."""
     rows = tag_dicts.collect()
     role_d: dict[str, dict[str, str]] = {}
     tool_d: dict[str, dict[str, str]] = {}
@@ -102,7 +111,7 @@ def enrich_tags_fast(
         F.element_at(by_combo(lambda m: kv(m, m)), lookup),
         F.lit(kv(fallback, fallback)),
     )
-    return df.withColumns({
+    return {
         # str_to_map('') is {'': null}, so no tags is an explicit empty map
         "tags": F.when(
             tags == "", F.create_map().cast("map<string,string>")
@@ -111,4 +120,4 @@ def enrich_tags_fast(
             F.element_at(by_combo(lambda m: kv(m, sorted(m))), lookup),
             F.lit(kv(fallback, sorted(fallback))),
         ),
-    })
+    }

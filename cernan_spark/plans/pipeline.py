@@ -20,18 +20,22 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cernan_spark.functions.classify import explode_lines, line_class
 from cernan_spark.functions.graphite import parse_graphite_lines
 from cernan_spark.functions.jsonlog import parse_json_logs
-from cernan_spark.functions.statsd import mask_bounds_expr, parse_statsd_lines
+from cernan_spark.functions.statsd import (
+    mask_bounds_expr,
+    parse_statsd_lines,
+    upgrade_histograms,
+)
 from cernan_spark.operators.aggregate import (
     bucket_aggregate_onepass,
     event_epoch_expr,
 )
-from cernan_spark.operators.enrich import enrich_tags_fast
+from cernan_spark.operators.enrich import tag_columns
 from cernan_spark.operators.route import route, routed_counts
 from cernan_spark.sources.dimensions import (
     default_histogram_masks,
@@ -63,6 +67,15 @@ def parse_stage(
     (name, value, kind, persist, event_epoch) + provenance
     (conv_id, turn_idx, order_key, role, tool, ts).
     """
+    return _parse_stage(
+        transcripts, None if masks is None else mask_bounds_expr(masks)
+    )
+
+
+def _parse_stage(
+    transcripts: DataFrame, bounds: Column | None
+) -> dict[str, DataFrame]:
+    """:func:`parse_stage` over an already built mask-bounds expression."""
     if "order_key" not in transcripts.columns:
         transcripts = transcripts.withColumn(
             "order_key",
@@ -71,7 +84,9 @@ def parse_stage(
     # Parse once, classify from parse validity (classifying first and then
     # re-parsing would evaluate the whole statsd string scan twice per line).
     exploded = explode_lines(transcripts)
-    parsed_all = parse_statsd_lines(exploded, masks=masks, keep_invalid=True)
+    parsed_all = parse_statsd_lines(exploded, keep_invalid=True)
+    if bounds is not None:
+        parsed_all = upgrade_histograms(parsed_all, bounds)
     lines = parsed_all.withColumn(
         "line_class", line_class(F.col("line"), F.col("is_valid"))
     )
@@ -125,8 +140,12 @@ def run_pipeline(
     )
     tag_dicts = tag_dicts if tag_dicts is not None else default_tag_dicts(spark)
     masks = masks if masks is not None else default_histogram_masks(spark)
+    # each config table is collected once: the parse and the aggregate
+    # share the mask-bounds expression, telemetry and logs the tag columns
+    bounds = mask_bounds_expr(masks)
+    tags = tag_columns(tag_dicts)
 
-    stages = parse_stage(transcripts, masks=masks)
+    stages = _parse_stage(transcripts, bounds)
     telemetry, logs, bad = stages["telemetry"], stages["logs"], stages["bad"]
 
     telemetry_unfiltered = None
@@ -150,8 +169,8 @@ def run_pipeline(
 
     # transcripts carry no event tags → the precomputed-combo fast path
     # (one projection over literal maps, no join, no per-row map merging)
-    telemetry = enrich_tags_fast(telemetry, tag_dicts)
-    logs = enrich_tags_fast(logs, tag_dicts)
+    telemetry = telemetry.withColumns(tags)
+    logs = logs.withColumns(tags)
 
     telemetry = telemetry.withColumn("match_kind_value", F.lit("telemetry"))
     logs = logs.withColumn("match_kind_value", F.lit("log")).withColumn(
@@ -168,7 +187,7 @@ def run_pipeline(
     # per-sink widths would fold `sink` into the aggregate's group key.
     agg_once = bucket_aggregate_onepass(
         telemetry, bin_width=cfg.bin_width, quantiles=cfg.quantiles,
-        accuracy=cfg.accuracy, bounds_expr=mask_bounds_expr(masks),
+        accuracy=cfg.accuracy, bounds_expr=bounds,
     )
     agg = route(
         agg_once.withColumn("match_kind_value", F.lit("telemetry")), routes

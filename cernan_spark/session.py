@@ -14,6 +14,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """The driver heap when $SPARK_DRIVER_MEM is unset: 64g, or half the
+    host's physical memory if that is smaller. A heap bigger than the host
+    grows past it before the collector runs, and the kernel kills the
+    JVM."""
+    half = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2
+    return f"{min(64 * 2**30, half) // 2**20}m"
+
+
 def get_spark(
     app_name: str = "cernan_spark",
     cpus: int | None = None,
@@ -40,7 +49,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # quantile sketches (TypedImperativeAggregate) otherwise fall back
@@ -48,7 +60,7 @@ def get_spark(
         # conservative for per-(series, bin) sketching
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
         # ContextCleaner frees broadcast/shuffle state via weak refs, i.e.
-        # only when the DRIVER GCs — with a 64g heap and a throughput
+        # only when the DRIVER GCs — with a large heap and a throughput
         # collector that can be never: repeated jobs in one JVM degraded
         # monotonically (6→34s over 4 identical runs) as torrent blocks and
         # shuffle files piled up. A periodic driver GC bounds the backlog;

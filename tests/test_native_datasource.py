@@ -255,3 +255,33 @@ def test_stream_rows_equal_batch_rows(registered, tmp_path):
         (4, "telemetry"),
     ]
     assert len(batch) == 3 + 1 + 2 + 1 + 3
+
+
+def test_native_spool_ignores_a_stale_spool(spark, tmp_path, monkeypatch):
+    """``native_spool`` writes its own spool on each call: a
+    ``cernan_spool_<sf>`` directory an earlier run left in the temp
+    directory (here a spool of one unrelated point) changes no row."""
+    import __spark_entry__ as em
+
+    sf = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "perfbench", "data", "sf0.001",
+    )
+    cols = ["conn_id", "frame_idx", "name", "sample_idx", "value", "kind",
+            "event_epoch"]
+
+    def rows(tmp):
+        tmp.mkdir(exist_ok=True)
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+        return sorted(
+            tuple(r) for r in em.q_native_spool(spark, sf).select(*cols).collect()
+        )
+
+    fresh = rows(tmp_path / "fresh")
+    stale = tmp_path / "stale"
+    write_spool(
+        [{"conn": 0, "name": "stale", "samples": [1.0], "kind": "SUM", "ts_ms": 0}],
+        str(stale / "cernan_spool_sf0.001"), 1,
+    )
+    assert fresh
+    assert rows(stale) == fresh

@@ -118,10 +118,9 @@ def _random_lines(n: int, seed: int) -> list[str]:
     return lines
 
 
-def test_statsd_random_sweep_vs_model(spark):
-    """Seeded sweep: Spark parse ≡ the pure-Python model (kind, persist,
-    value within fp tolerance) — the quickcheck round-trip stand-in."""
-    lines = _random_lines(400, seed=42)
+def _check_vs_model(spark, lines):
+    """Spark parse ≡ the pure-Python model on ``lines``: validity, and
+    (name, kind, persist, value within fp tolerance) of the valid ones."""
     df = spark.createDataFrame([(l,) for l in lines], "line string")
     got = {r["line"]: r for r in parse_statsd_lines(df, keep_invalid=True).collect()}
     for line in lines:
@@ -129,12 +128,38 @@ def test_statsd_random_sweep_vs_model(spark):
         row = got[line]
         if expected is None:
             assert not row["is_valid"], f"spark parsed bad line {line!r}"
+            assert (row["name"], row["value"], row["kind"], row["persist"]) == (
+                None, None, None, None
+            ), line
         else:
             assert row["is_valid"], f"spark rejected good line {line!r}"
             assert row["name"] == expected.name
             assert row["kind"] == expected.kind
             assert row["persist"] == expected.persist
             assert row["value"] == pytest.approx(expected.value, rel=1e-12)
+
+
+def test_statsd_random_sweep_vs_model(spark):
+    """Seeded sweep: Spark parse ≡ the pure-Python model — the quickcheck
+    round-trip stand-in."""
+    _check_vs_model(spark, _random_lines(400, seed=42))
+
+
+# slicer edge cases: empty slices, a pipe before the colon, repeated
+# separators, rate forms and multibyte text. instr, locate and substr all
+# count characters, not bytes, so the multibyte lines pin that the slices
+# land on character positions.
+SLICER_EDGES = [
+    "", ":", "|", ":|", "a:", "a:|c", ":1|c", "a|b:1|c", "a:b:1|c",
+    "a::1|c", "a:1|c|", "a:1||c", "a:1|c:2|g", "a:1|c@0.5", "a:1|c|@0.5",
+    "a:1|c@", "a:1|c@x", "a:1|c@0", "a: 1 |c",
+    "é:1|c", "名前:1.5|ms", "名前:1.5|ms@0.5", "a:1|üms@0.5", "a:1|ms@ü0.5",
+    "a:ü|ms@0.5", "ü|a:1|c",
+]
+
+
+def test_statsd_slicer_edges_vs_model(spark):
+    _check_vs_model(spark, SLICER_EDGES)
 
 
 def test_classify_vs_model(spark):

@@ -83,6 +83,18 @@ def test_parse_scan_prunes_columns(spark):
     assert "props" not in read_schema
 
 
+def test_statsd_parse_scans_each_line_once(spark):
+    """The statsd slicer finds ':' once and '|' once per line, as the
+    reference's single scan does (statsd.rs:553-573): a slice that
+    re-derives a position copies the scan into the optimized plan."""
+    from cernan_spark.functions.statsd import parse_statsd_lines
+
+    df = spark.createDataFrame([("a:1|c",)], "line string")
+    plan = parse_statsd_lines(df)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("instr(") == 1
+    assert plan.count("locate(") == 1
+
+
 def test_benchmark_decontam_broadcasts_eval_side(spark):
     """Decontamination probes the (tiny) benchmark shingle set as a
     broadcast: the corpus must never shuffle on the shingle."""
