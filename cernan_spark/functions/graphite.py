@@ -15,26 +15,36 @@ _NUM = r"[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?"
 GRAPHITE_LINE_RX = rf"^(\S+)\s+({_NUM})\s+([+-]?\d+)$"
 
 
-def graphite_parse_columns(line: Column) -> list[Column]:
-    name = F.regexp_extract(line, GRAPHITE_LINE_RX, 1)
+def graphite_name(line: Column) -> Column:
+    """The line's name (the first regex group): '' exactly when the line
+    is not a graphite triple, since a match's name is never empty."""
+    return F.regexp_extract(line, GRAPHITE_LINE_RX, 1)
+
+
+def graphite_columns(line: Column, name: Column) -> dict[str, Column]:
+    """(name, value, kind, persist, event_epoch, is_valid) of a graphite
+    line whose :func:`graphite_name` is ``name``; value and timestamp are
+    extracted only from lines that match."""
+    valid = name != F.lit("")
     val = F.regexp_extract(line, GRAPHITE_LINE_RX, 2)
     ets = F.regexp_extract(line, GRAPHITE_LINE_RX, 3)
-    valid = name != F.lit("")
-    return [
-        F.when(valid, name).alias("name"),
-        F.when(valid, val.cast("double")).alias("value"),
-        F.when(valid, F.lit("SET")).alias("kind"),
-        F.when(valid, F.lit(False)).alias("persist"),
-        F.when(valid, ets.cast("long")).alias("event_epoch"),
-        valid.alias("is_valid"),
-    ]
+    return {
+        "name": F.when(valid, name),
+        "value": F.when(valid, val.cast("double")),
+        "kind": F.when(valid, F.lit("SET")),
+        "persist": F.when(valid, F.lit(False)),
+        "event_epoch": F.when(valid, ets.cast("long")),
+        "is_valid": valid,
+    }
 
 
 def parse_graphite_lines(
     df: DataFrame, line_col: str = "line", keep_invalid: bool = False
 ) -> DataFrame:
     """Parse graphite triples; overrides the row timestamp with the wire one."""
-    out = df.select("*", *graphite_parse_columns(F.col(line_col)))
+    line = F.col(line_col)
+    cols = graphite_columns(line, graphite_name(line))
+    out = df.select("*", *[c.alias(k) for k, c in cols.items()])
     if not keep_invalid:
         out = out.filter(F.col("is_valid"))
     return out

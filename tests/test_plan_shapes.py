@@ -95,6 +95,22 @@ def test_statsd_parse_scans_each_line_once(spark):
     assert plan.count("locate(") == 1
 
 
+def test_parse_stage_telemetry_is_one_arm(spark):
+    """Telemetry reads each line once: no union re-scanning and
+    re-exploding the transcripts for a second wire format, and the
+    graphite regex extracts each of its three groups once (the name
+    behind the Generate barrier, value and timestamp from its matches)."""
+    from cernan_spark.plans.pipeline import parse_stage
+    from cernan_spark.sources.transcripts import synthetic_transcripts
+
+    t = synthetic_transcripts(spark, n_convs=2, turns_per_conv=5, seed=3)
+    plan = parse_stage(t)["telemetry"]._jdf.queryExecution().optimizedPlan().toString()
+    assert _count(plan, r"\bUnion\b") == 0, plan
+    assert plan.count("split(") == 1, plan
+    assert plan.count("instr(") == 1, plan
+    assert plan.count("regexp_extract(") == 3, plan
+
+
 def test_benchmark_decontam_broadcasts_eval_side(spark):
     """Decontamination probes the (tiny) benchmark shingle set as a
     broadcast: the corpus must never shuffle on the shingle."""
